@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Per-round benchmark: times every SparkEntry query on the driver-chosen
@@ -16,23 +15,16 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = Session.cores
     val benchDocs = sys.env.getOrElse("SPARK_GRAFT_BENCH_DOCS", "200000").toLong
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      // the sf testdata ships one small parquet file per table — at the
-      // default 128m split size every scan is ONE partition and any
-      // heavy per-row UDF stage (minhash signatures: ~0.5 ms/doc)
-      // serializes onto a single core. Production inputs arrive in
-      // thousands of splits; locally the split knob restores the same
-      // scan parallelism (measured: dedup_jaccard_pairs 5.5 -> ~2 s).
-      .config("spark.sql.files.maxPartitionBytes", "1m")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session("graft-bench", cpus)
+    // the sf testdata ships one small parquet file per table — at the
+    // default 128m split size every scan is ONE partition and any
+    // heavy per-row UDF stage (minhash signatures: ~0.5 ms/doc)
+    // serializes onto a single core. Production inputs arrive in
+    // thousands of splits; locally the split knob restores the same
+    // scan parallelism (measured: dedup_jaccard_pairs 5.5 -> ~2 s).
+    spark.conf.set("spark.sql.files.maxPartitionBytes", "1m")
 
     def time[A](f: => A): Double = {
       val t0 = System.nanoTime()
@@ -46,7 +38,7 @@ object Bench {
     // a clean JVM, before the catalog queries pollute heap/JIT state) ----
     val corpusPath = s"/tmp/graft_bench_corpus_$benchDocs"
     if (!new java.io.File(s"$corpusPath/_SUCCESS").exists()) {
-      graft.fixtures.CCPages.generate(spark, benchDocs, partitions = cpus.toInt * 2)
+      graft.fixtures.CCPages.generate(spark, benchDocs, partitions = cpus * 2)
         .write.mode("overwrite").parquet(corpusPath)
     }
     val corpus = spark.read.parquet(corpusPath)

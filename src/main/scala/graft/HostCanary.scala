@@ -2,17 +2,19 @@ package graft
 
 /** Same-moment host-interference probe for scaling measurements.
   *
-  * The sandbox's 32 vCPUs share a physical host with invisible
+  * A host's vCPUs can share a physical machine with invisible
   * co-tenants: guest load and steal time both read ~0 while aggregate
-  * wide-multiply throughput silently caps well below 32 cores
-  * (observed range this round: 8→32-thread efficiency 0.34–0.92 on an
+  * wide-multiply throughput silently caps well below the core count
+  * (observed on a 32-vCPU host: 8→32-thread efficiency 0.34–0.92 on an
   * idle guest, varying over minutes). Dependency-chained low-IPC loops
   * scale ~0.95 regardless — the contended resource is multiply/memory
   * throughput, exactly what the MinHash permutation kernel saturates.
   *
   * This probe runs a register-only Mersenne-modmul loop (the signature
   * kernel's instruction mix, no memory traffic) at two thread counts
-  * and reports throughput efficiency. A soak or scaling measurement
+  * and reports throughput efficiency. Both counts must fit the cores:
+  * above the core count the threads time-share and the reading falls
+  * however quiet the host is. A soak or scaling measurement
   * taken while the canary reads < ~0.85 is host-degraded, not a build
   * property; BASELINE.md rows cite the same-minute canary value.
   */
@@ -61,9 +63,10 @@ object HostCanary {
     threads * itersPerThread / sec
   }
 
-  /** 8→32-thread scaling efficiency of the probe kernel right now.
+  /** lo→hi-thread scaling efficiency of the probe kernel right now,
+    * by default one thread against one per core.
     * ~1.0 = quiet host; well below ~0.85 = external interference. */
-  def efficiency(lo: Int = 8, hi: Int = 32): Double = {
+  def efficiency(lo: Int = 1, hi: Int = Runtime.getRuntime.availableProcessors): Double = {
     throughput(2, 30_000_000L) // JIT warmup, untimed in effect
     val tLo = throughput(lo, 300_000_000L)
     val tHi = throughput(hi, 300_000_000L)
@@ -71,7 +74,8 @@ object HostCanary {
   }
 
   def main(args: Array[String]): Unit = {
-    val e = efficiency()
-    println(f"[canary] host multiply-throughput scaling eff(8->32)=$e%.3f")
+    val hi = Runtime.getRuntime.availableProcessors
+    val e = efficiency(1, hi)
+    println(f"[canary] host multiply-throughput scaling eff(1->$hi)=$e%.3f")
   }
 }

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Incremental-dedup scaling probe: evidences the "cost ∝ batch, not
@@ -12,7 +11,7 @@ import org.apache.spark.sql.functions._
   *   (c) what a non-incremental pipeline pays for the same snapshot:
   *       full fuzzy dedup over corpus ∪ batch.
   *
-  * Args: corpusParquet [batchDocs=40000] [cpus=32]. The batch is the
+  * Args: corpusParquet [batchDocs=40000] [cores]. The batch is the
   * next `batchDocs` rows of the same deterministic CCPages stream, so
   * it genuinely duplicates the corpus (the planted i%40==8 exact group)
   * and itself (class-9 near-dups).
@@ -21,12 +20,8 @@ object IncSoak {
   def main(args: Array[String]): Unit = {
     val corpusPath = args(0)
     val batchDocs = if (args.length > 1) args(1).toLong else 40000L
-    val cpus = if (args.length > 2) args(2).toInt else 32
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = if (args.length > 2) args(2).toInt else Session.cores
+    val spark = Session("graft-inc-soak", cpus)
 
     def time[A](f: => A): (A, Double) = {
       val t0 = System.nanoTime(); val a = f; (a, (System.nanoTime() - t0) / 1e9)
@@ -61,27 +56,6 @@ object IncSoak {
       val (r, t1) = time(graft.dedup.IncrementalDedup.fuzzyRemovalIds(batch, idx).count())
       val (_, t2) = time(graft.dedup.IncrementalDedup.fuzzyRemovalIds(batch, idx).count())
       (r, math.min(t1, t2))
-    }
-    if (sys.env.contains("INC_SOAK_BREAKDOWN")) {
-      val (bChk, tB) = time {
-        graft.dedup.IncrementalDedup.fuzzyIndex(batch).localCheckpoint(true)
-      }
-      val (_, tHits) = time {
-        val hot = bChk.select("band", "band_hash").distinct()
-        val ch = idx.select("band", "band_hash")
-          .join(hot, Seq("band", "band_hash"), "left_semi").distinct()
-        bChk.join(ch, Seq("band", "band_hash"), "left_semi")
-          .select(col("doc_id")).distinct().count()
-      }
-      val (_, tCC) = time {
-        val w = org.apache.spark.sql.expressions.Window
-          .partitionBy("band", "band_hash").orderBy("doc_id")
-        val edges = bChk.withColumn("src", lag(col("doc_id"), 1).over(w))
-          .filter(col("src").isNotNull)
-          .select(col("src"), col("doc_id").as("dst")).distinct()
-        graft.dedup.ConnectedComponents.run(edges).count()
-      }
-      println(f"[inc-breakdown] batch_bands=$tB%.1f s hits=$tHits%.1f s edges_cc=$tCC%.1f s")
     }
     val (fullRemoved, tFull) = {
       val (r, t1) = time(graft.dedup.MinHashLSH.removalIds(corpus.unionByName(batch)).count())

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.functions._
 import java.nio.file.{Files, Paths}
 
 /** Two-parallelism scaling evidence (BASELINE.md protocol): the north
@@ -28,14 +26,7 @@ object ScalingBench {
   private def corpusPath = s"/tmp/graft_scaling_corpus_$docs"
   private def resultPath(cpus: Int) = s"/tmp/graft_scaling_result_$cpus.csv"
 
-  private def session(cpus: Int): SparkSession = SparkSession.builder()
-    .master(s"local[$cpus]")
-    .config("spark.sql.shuffle.partitions", cpus)
-    .config("spark.sql.adaptive.enabled", "true")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  def main(args: Array[String]): Unit = args.headOption.getOrElse("all") match {
+  def main(args: Array[String]): Unit = args(0) match {
     case "gen" => gen()
     case "measure" => measure(args(1).toInt)
     case "report" =>
@@ -43,13 +34,10 @@ object ScalingBench {
       // absolute levels (e.g. 4 16) shows the 4x ratio holds regardless
       // of where N sits, not just at the 8->32 point
       if (args.length > 2) report(args(1).toInt, args(2).toInt) else report()
-    case "all" => // single-JVM fallback (noisier)
-      gen(); measure(8); measure(32); report()
   }
 
   private def gen(): Unit = {
-    val s = session(32)
-    s.sparkContext.setLogLevel("WARN")
+    val s = Session("graft-scaling-gen")
     if (!new java.io.File(s"$corpusPath/_SUCCESS").exists()) {
       // 256 splits so both parallelism levels see balanced work
       graft.fixtures.CCPages.generate(s, docs, partitions = 256)
@@ -60,8 +48,7 @@ object ScalingBench {
   }
 
   private def measure(cpus: Int): Unit = {
-    val s = session(cpus)
-    s.sparkContext.setLogLevel("WARN")
+    val s = Session("graft-scaling-measure", cpus)
     val corpus = s.read.parquet(corpusPath)
     // codegen + JIT warmup in this JVM, untimed
     graft.pipeline.CurationPipeline.keptOutput(

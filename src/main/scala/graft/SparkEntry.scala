@@ -741,7 +741,7 @@ object SparkEntry {
     // 0.95 gate at every scale, so the embed → cluster → pairwise path
     // has the same scale-robust equality oracle as the sketch tiers
     // (raw-text runs diverge at sf0.1 where hashed-ngram cosine and
-    // token-Jaccard disagree near their thresholds — CheckPairs)
+    // token-Jaccard disagree near their thresholds)
     "emb_text_neardup" -> ((s, dir) => {
       val emb = graft.sim.HashEmbedder.withEmbedding(
           spread(tbl(s, dir, "documents").withColumn("text", expr(embNearDupIn))))

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -9,17 +8,10 @@ object Verify {
     // optional trailing names: dump only those queries (iteration aid;
     // the driver always runs the full board)
     val only = args.drop(2).toSet
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      // split the single-file sf tables so per-row UDF stages
-      // parallelize (see Bench.scala note)
-      .config("spark.sql.files.maxPartitionBytes", "1m")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session("graft-verify")
+    // split the single-file sf tables so per-row UDF stages
+    // parallelize (see Bench.scala note)
+    spark.conf.set("spark.sql.files.maxPartitionBytes", "1m")
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries.filter(kv => only.isEmpty || only(kv._1)).foreach { case (name, fn) =>
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")

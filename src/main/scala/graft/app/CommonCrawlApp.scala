@@ -128,11 +128,7 @@ object CommonCrawlApp {
     require(args.length >= 4, "usage: CommonCrawlApp <start> <end> <downloadDir> <outDir> [limit] [--fixture]")
     val limit = args.drop(4).find(_.forall(_.isDigit)).map(_.toInt)
     val fixture = args.contains("--fixture")
-    val spark = SparkSession.builder()
-      .appName("graft-common-crawl")
-      .config("spark.sql.adaptive.enabled", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Session("graft-common-crawl")
     val fetch = if (fixture) fixtureFetch(spark) else httpFetch
     val streamFetch = if (fixture) None else Some(httpStreamFetch)
     run(spark, args(0), args(1), args(2), args(3), fetch, limit, streamFetch)

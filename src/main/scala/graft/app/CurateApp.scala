@@ -1,6 +1,6 @@
 package graft.app
 
-import org.apache.spark.sql.{SaveMode, SparkSession}
+import org.apache.spark.sql.SaveMode
 import org.apache.spark.sql.functions._
 import graft.io.ManifestParquetIO
 import graft.pipeline.CurationPipeline
@@ -31,15 +31,7 @@ object CurateApp {
     val outRoot = args(1)
     val unitBuckets = if (args.length > 2) args(2).toInt else 64
 
-    val builder = SparkSession.builder()
-      .appName("graft-curate")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.skewJoin.enabled", "true")
-    // spark-submit injects spark.master; local runs fall back
-    val spark = (if (sys.props.contains("spark.master")) builder
-                 else builder.master(sys.env.getOrElse("SPARK_GRAFT_MASTER", "local[8]")))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Session("graft-curate")
 
     val io = new ManifestParquetIO(outRoot)
     val pages = spark.read.parquet(input)

@@ -1,7 +1,5 @@
 package graft.app
 
-import org.apache.spark.sql.SparkSession
-
 /** spark-submit entry point for config-driven runs — the reference's
   * `python -m ... --config-path` CLI shape:
   *
@@ -25,14 +23,7 @@ object PipelineApp {
       kv.substring(0, i) -> kv.substring(i + 1)
     }.toMap
 
-    val builder = SparkSession.builder()
-      .appName("graft-pipeline")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.skewJoin.enabled", "true")
-    val spark = (if (sys.props.contains("spark.master")) builder
-                 else builder.master(sys.env.getOrElse("SPARK_GRAFT_MASTER", "local[8]")))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Session("graft-pipeline")
 
     val isWorkflow = {
       val src = java.nio.file.Files.readString(java.nio.file.Paths.get(yamlPath))

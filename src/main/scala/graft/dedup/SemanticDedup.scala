@@ -117,8 +117,7 @@ object SemanticDedup {
       // multi-probe blocking: each row carries its top-`probes` cells,
       // so a near-dup pair straddling a cell boundary still shares one
       // (measured: single-probe blocking misses ~2% of exact pairs at
-      // sf0.1 — CheckPairs/CheckMissing; probes=2 recovers them at ~4x
-      // pairwise cost)
+      // sf0.1; probes=2 recovers them at ~4x pairwise cost)
       val predictU = udf((v: Seq[Float]) => model.predictTop(KMeansLite.normalize(v), probes))
       df.withColumn("cluster", explode(predictU(col(vecCol))))
     }

@@ -52,7 +52,9 @@ object HtmlExtract {
   /** Decode raw page bytes: strict UTF-8 first, then a windows-1252
     * fallback (the deterministic stand-in for the reference's
     * charset-detection fallback, download/utils.py:63-83; cp1252 is the
-    * dominant non-UTF-8 web encoding). Returns None if both fail.
+    * dominant non-UTF-8 web encoding). The fallback cannot fail: bytes
+    * cp1252 leaves undefined (0x81, 0x8D, 0x8F, 0x90, 0x9D) decode to
+    * U+FFFD, so every input yields Some.
     */
   def decode(bytes: Array[Byte]): Option[String] = {
     try {
@@ -62,8 +64,7 @@ object HtmlExtract {
       Some(dec.decode(java.nio.ByteBuffer.wrap(bytes)).toString)
     } catch {
       case _: java.nio.charset.CharacterCodingException =>
-        try Some(new String(bytes, Charset.forName("windows-1252")))
-        catch { case _: Throwable => None }
+        Some(new String(bytes, Charset.forName("windows-1252")))
     }
   }
 

@@ -1,6 +1,6 @@
 package graft.fixtures
 
-import org.apache.spark.sql.{SaveMode, SparkSession}
+import org.apache.spark.sql.SaveMode
 
 /** Writes the deterministic cc_pages fixture (FIXTURES.md F1) used by the
   * reference-parity tests. Run once; output is committed so
@@ -12,13 +12,7 @@ object DumpFixtures {
   def main(args: Array[String]): Unit = {
     val out = if (args.length > 0) args(0) else "src/test/resources/cc_pages_tiny"
     val rows = if (args.length > 1) args(1).toLong else 2000L
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", 8)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Session("graft-dump-fixtures")
     CCPages.generate(spark, rows, partitions = 4)
       .coalesce(1)
       .write.mode(SaveMode.Overwrite).parquet(out)

@@ -144,4 +144,11 @@ class SparkOpsSpec extends AnyFunSuite {
     assert(out.count() > 80) // some pages lose all paragraphs to the density gate
     assert(out.columns.contains("keep") && out.columns.contains("text"))
   }
+
+  test("SparkEntry.entry: the curated sf0.001 documents with the contract columns") {
+    val df = SparkEntry.entry(spark)
+    assert(df.columns.toSeq ==
+      Seq("doc_id", "keep", "first_reject", "quality_score", "token_count", "scrubbed_text"))
+    assert(df.count() == 500)
+  }
 }

@@ -5,13 +5,9 @@ import org.apache.spark.sql.SparkSession
 /** One shared local session for all Spark-backed suites. */
 object SparkTestBase {
   lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-tests")
-      .config("spark.sql.shuffle.partitions", 4)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    // fixed cores, so suite partitioning does not vary with the host;
+    // ERROR keeps Spark's warnings out of the test log
+    val s = Session("graft-tests", cores = 4)
     s.sparkContext.setLogLevel("ERROR")
     s
   }

@@ -39,6 +39,8 @@ class ExtractSpec extends AnyFunSuite {
     assert(HtmlExtract.decode("héllo".getBytes("UTF-8")).contains("héllo"))
     val cp1252 = "it’s".getBytes("windows-1252") // 0x92 is invalid UTF-8
     assert(HtmlExtract.decode(cp1252).contains("it’s"))
+    // 0x81 is invalid UTF-8 and undefined in cp1252: U+FFFD, not None
+    assert(HtmlExtract.decode(Array[Byte]('a', 0x81.toByte, 'b')).contains("a\uFFFDb"))
   }
 
   test("extraction joins kept paragraphs with \\n\\n (extract.py:88 invariant)") {
