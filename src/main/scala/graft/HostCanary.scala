@@ -17,6 +17,10 @@ package graft
   * however quiet the host is. A soak or scaling measurement
   * taken while the canary reads < ~0.85 is host-degraded, not a build
   * property; BASELINE.md rows cite the same-minute canary value.
+  * That threshold was set from 8→32 readings on a 32-vCPU host; the
+  * default 1→cores reading also carries single-core turbo and a noisier
+  * single-thread leg, so it is not comparable with those values
+  * (BASELINE.md, host-interference canary).
   */
 object HostCanary {
 

@@ -16,6 +16,10 @@ class SessionSpec extends AnyFunSuite {
     assert(spark.conf.get("spark.sql.adaptive.enabled") == "true")
   }
 
+  test("under a preset spark.master the session keeps the submitted partitions and UI") {
+    assert(Session.settings(cores = 4, masterSet = true) == Seq("spark.sql.session.timeZone" -> "UTC"))
+  }
+
   test("sessions are built only in graft.Session") {
     val builderCall = "SparkSession" + ".builder" // split so this file does not match
     def scalaFiles(root: String): Seq[Path] = {
