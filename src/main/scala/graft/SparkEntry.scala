@@ -655,15 +655,13 @@ object SparkEntry {
     // repartition subtree (and each pays its own codegen of it)
     "dedup_simhash_pairs" -> ((s, dir) =>
       SimHash.verifiedNearDupPairs(
-          spread(tbl(s, dir, "documents").withColumn("text", expr(swapDupIn)))
-            .localCheckpoint(true),
+          Materialize(spread(tbl(s, dir, "documents").withColumn("text", expr(swapDupIn)))),
           maxHamming = 4, minJaccard = 0.5)
         .select(col("src"), col("dst"), round(col("jaccard"), 6).as("jaccard"))),
 
     "dedup_jaccard_pairs" -> ((s, dir) =>
       MinHashLSH.verifiedPairs(
-          spread(tbl(s, dir, "documents").withColumn("text", expr(nearDupIn)))
-            .localCheckpoint(true),
+          Materialize(spread(tbl(s, dir, "documents").withColumn("text", expr(nearDupIn)))),
           minJaccard = 0.5)
         .select(col("src"), col("dst"), round(col("jaccard"), 6).as("jaccard"))),
 

@@ -1,7 +1,10 @@
 package graft
 import java.nio.file.{Files, Paths}
-/** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare. */
+import scala.util.control.NonFatal
+/** Correctness dump: each SparkEntry.queries result → parquet, plus
+  * oracle_sql.json, for the DuckDB compare (tools/compare_oracle.py).
+  * A failed entry does not stop the dump; the run ends by naming every
+  * failed entry and exiting 1. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val (sfDir, outDir) = (args(0), args(1))
@@ -13,11 +16,13 @@ object Verify {
     // parallelize (see Bench.scala note)
     spark.conf.set("spark.sql.files.maxPartitionBytes", "1m")
     new java.io.File(outDir).mkdirs()
-    SparkEntry.queries.filter(kv => only.isEmpty || only(kv._1)).foreach { case (name, fn) =>
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
-      catch { case e: Throwable =>
-        System.err.println(s"[verify] $name failed: ${e.getMessage}")
+    val failures = SparkEntry.queries.filter(kv => only.isEmpty || only(kv._1)).flatMap { case (name, fn) =>
+      try {
+        fn(spark, sfDir).coalesce(1).write.mode("overwrite").parquet(s"$outDir/$name")
+        None
+      } catch { case NonFatal(e) =>
+        System.err.println(s"[verify] $name failed: $e")
+        Some(name -> e)
       }
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
@@ -36,5 +41,10 @@ object Verify {
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     spark.stop()
+    if (failures.nonEmpty) {
+      System.err.println(s"[verify] ${failures.size} failed: " +
+        failures.map { case (name, e) => s"$name ($e)" }.mkString("; "))
+      sys.exit(1)
+    }
   }
 }

@@ -2,6 +2,7 @@ package graft.dedup
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import graft.Materialize
 
 /** Connected components over an edge list, as alternating large-star /
   * small-star DataFrame rounds (Kiveris et al. 2014, "Connected
@@ -86,16 +87,15 @@ object ConnectedComponents {
         greatest($"src", $"dst").as("src"), least($"src", $"dst").as("dst"))
       val ss = oriented.groupBy($"src")
         .agg(min($"dst").as("mn"), collect_set($"dst").as("nbrs"))
-      // localCheckpoint truncates the logical plan: without it the
+      // materializing truncates the logical plan: without it the
       // union-of-unions lineage doubles per round and Catalyst
       // re-analysis grows exponentially (observed: 4.6s → 30s → minutes
       // per round on a 381-edge graph)
-      val next = ss.select($"src", $"mn", explode($"nbrs").as("v"))
+      val next = Materialize(ss.select($"src", $"mn", explode($"nbrs").as("v"))
         .select($"v".as("src"), $"mn".as("dst"))
         .union(ss.select($"src", $"mn".as("dst")))
         .filter($"src" =!= $"dst")
-        .distinct()
-        .localCheckpoint(true)
+        .distinct())
 
       val cs = checksum(next)
       converged = cs == prev

@@ -41,15 +41,4 @@ object ExactDedup {
     */
   def removeDuplicates(df: DataFrame, idCol: String = "doc_id", textCol: String = "text"): DataFrame =
     df.join(removalIds(df, idCol, textCol), Seq(idCol), "left_anti")
-
-  /** Keep-one-per-group in a single pass (when the caller wants the
-    * deduplicated corpus directly rather than a removal list).
-    */
-  def dedupeKeepFirst(df: DataFrame, idCol: String = "doc_id", textCol: String = "text"): DataFrame = {
-    val w = Window.partitionBy("_dup_hash").orderBy(col(idCol))
-    df.withColumn("_dup_hash", md5(to_binary(col(textCol), lit("utf-8"))))
-      .withColumn("_rn", row_number().over(w))
-      .filter(col("_rn") === 1)
-      .drop("_dup_hash", "_rn")
-  }
 }

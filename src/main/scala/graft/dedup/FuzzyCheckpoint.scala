@@ -1,6 +1,6 @@
 package graft.dedup
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.io.ManifestParquetIO
@@ -31,10 +31,6 @@ import graft.io.ManifestParquetIO
   */
 object FuzzyCheckpoint {
 
-  private def stage(io: ManifestParquetIO, spark: SparkSession, table: String)
-                   (compute: => DataFrame): DataFrame =
-    io.stageTable(spark, table)(compute)
-
   /** Persist the id-annotated input once and read it back on every run.
     * Synthetic ids (`monotonically_increasing_id`) are NOT guaranteed
     * stable between a crashed run and its rerun (they depend on scan
@@ -44,7 +40,7 @@ object FuzzyCheckpoint {
     * output (id_generator.py:30-78).
     */
   def stableInput(df: DataFrame, cachePath: String): DataFrame =
-    stage(new ManifestParquetIO(cachePath), df.sparkSession, "input_ids")(df)
+    new ManifestParquetIO(cachePath).stageTable(df.sparkSession, "input_ids")(df)
 
   /** Fuzzy-dedup removal ids with stage-level resume under `cachePath`.
     * `df`'s `idCol` must be stable across reruns (a real id field, or
@@ -55,10 +51,10 @@ object FuzzyCheckpoint {
     val spark = df.sparkSession
     val io = new ManifestParquetIO(cachePath)
 
-    val sigs = stage(io, spark, "minhashes")(MinHashLSH.signatures(df, p, idCol, textCol))
-    val edges = stage(io, spark, "edges")(
+    val sigs = io.stageTable(spark, "minhashes")(MinHashLSH.signatures(df, p, idCol, textCol))
+    val edges = io.stageTable(spark, "edges")(
       MinHashLSH.edgesFromBands(MinHashLSH.bands(sigs, p, idCol), idCol))
-    val comps = stage(io, spark, "components")(ConnectedComponents.run(edges))
+    val comps = io.stageTable(spark, "components")(ConnectedComponents.run(edges))
     comps.filter(col("id") =!= col("component")).select(col("id").as(idCol))
   }
 }

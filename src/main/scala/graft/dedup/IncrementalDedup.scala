@@ -3,6 +3,7 @@ package graft.dedup
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.Materialize
 
 /** Incremental (cross-snapshot) deduplication: dedupe a NEW batch of
   * documents against a persisted index of an already-curated corpus,
@@ -81,10 +82,10 @@ object IncrementalDedup {
   def fuzzyRemovalIds(batch: DataFrame, index: DataFrame,
                       p: MinHashLSH.Params = MinHashLSH.Params(),
                       idCol: String = "doc_id", textCol: String = "text"): DataFrame = {
-    // eager localCheckpoint: the band table feeds both the index
+    // materialized: the band table feeds both the index
     // semi-join and the intra-batch edge window — without
     // materialization the signature UDF pass would run twice
-    val b = fuzzyIndex(batch, p, idCol, textCol).localCheckpoint(true)
+    val b = Materialize(fuzzyIndex(batch, p, idCol, textCol))
     removalsFromBands(b, index, idCol)
   }
 
@@ -110,16 +111,15 @@ object IncrementalDedup {
     val hot = b.select("band", "band_hash").distinct()
     val corpusHits = index.select("band", "band_hash")
       .join(hot, Seq("band", "band_hash"), "left_semi")
-    // eager localCheckpoint: hits (a thin id list bounded by the batch)
+    // materialized: hits (a thin id list bounded by the batch)
     // feeds THREE consumers below (the anchored semi-join and the final
     // union, with `anchored` itself consumed twice) — without
     // materialization the whole index subtree, including the corpus-side
     // signature pass when the index arrives lazy, was evaluated three
     // times in the final plan (3 parquet scans observed; ~2x on the
     // catalog entry)
-    val hits = b.join(corpusHits, Seq("band", "band_hash"), "left_semi")
-      .select(col(idCol).as("id"))
-      .localCheckpoint(true)
+    val hits = Materialize(b.join(corpusHits, Seq("band", "band_hash"), "left_semi")
+      .select(col(idCol).as("id")))
 
     // intra-batch candidate edges: consecutive-pair chain per bucket
     // without a distinct (the edge-level dedup happens inside
@@ -208,9 +208,9 @@ object IncrementalDedup {
                               idCol: String = "doc_id", textCol: String = "text",
                               updateIndex: Boolean = true): DataFrame = {
     val spark = batch.sparkSession
-    val b = fuzzyIndex(batch, p, idCol, textCol).localCheckpoint(true)
-    val removal = removalsFromBands(b, committedSnapshotBands(spark, indexRoot, snapshotId), idCol)
-      .localCheckpoint(true)
+    val b = Materialize(fuzzyIndex(batch, p, idCol, textCol))
+    val removal = Materialize(
+      removalsFromBands(b, committedSnapshotBands(spark, indexRoot, snapshotId), idCol))
     if (updateIndex) {
       val keptBands = b.join(removal, Seq(idCol), "left_anti")
       new graft.io.ManifestParquetIO(indexRoot).write(keptBands, snapTable(snapshotId))
@@ -234,9 +234,8 @@ object IncrementalDedup {
                               idCol: String = "doc_id", textCol: String = "text",
                               updateIndex: Boolean = true): DataFrame = {
     val spark = batch.sparkSession
-    val removal = exactRemovalIds(batch,
-        committedSnapshotHashes(spark, indexRoot, snapshotId), idCol, textCol)
-      .localCheckpoint(true)
+    val removal = Materialize(exactRemovalIds(batch,
+        committedSnapshotHashes(spark, indexRoot, snapshotId), idCol, textCol))
     if (updateIndex) {
       val kept = batch.join(removal, Seq(idCol), "left_anti")
       new graft.io.ManifestParquetIO(indexRoot).write(exactIndex(kept, textCol), snapTable(snapshotId))
@@ -267,12 +266,11 @@ object IncrementalDedup {
   def exactRemovalIds(batch: DataFrame, index: DataFrame,
                       idCol: String = "doc_id", textCol: String = "text"): DataFrame = {
     val w = Window.partitionBy("_dup_hash").orderBy(col(idCol))
-    // eager localCheckpoint: ranked (thin (hash, id, rn), bounded by the
+    // materialized: ranked (thin (hash, id, rn), bounded by the
     // batch) feeds both the intra-loser filter and the index semi-join —
     // without it the batch scan + md5 + window shuffle run twice
-    val ranked = ExactDedup.hashed(batch, idCol, textCol)
-      .withColumn("_rn", row_number().over(w))
-      .localCheckpoint(true)
+    val ranked = Materialize(ExactDedup.hashed(batch, idCol, textCol)
+      .withColumn("_rn", row_number().over(w)))
     val intraLosers = ranked.filter(col("_rn") > 1).select(col(idCol))
     val indexedKept = ranked.filter(col("_rn") === 1)
       .join(index.select(col("text_md5").as("_dup_hash")), Seq("_dup_hash"), "left_semi")

@@ -2,6 +2,7 @@ package graft.dedup
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.Materialize
 import graft.text.PyText
 
 /** Fuzzy deduplication via MinHash + banded LSH.
@@ -93,7 +94,7 @@ object MinHashLSH {
     * arrays persist per thread and are re-zeroed only over the
     * capacity a document actually needs.
     */
-  private final class ShingleScratch {
+  private[dedup] final class ShingleScratch {
     private var table: Array[Long] = new Array[Long](1 << 12)
     private var dense: Array[Long] = new Array[Long](1 << 11)
     private var mask: Int = 0
@@ -101,8 +102,11 @@ object MinHashLSH {
 
     /** Prepare for a doc with at most `capacity` distinct shingles. */
     def reset(capacity: Int): Unit = {
+      // the table is the power of two ≥ 2 × capacity; past 2^29 that no
+      // longer fits an Int-sized array
+      require(capacity >= 0 && capacity <= (1 << 29), s"shingle capacity $capacity out of range")
       var cap = 1 << 12
-      while (cap < capacity * 2) cap <<= 1
+      while (cap < capacity.toLong * 2) cap <<= 1
       if (table.length < cap) {
         table = new Array[Long](cap)
         dense = new Array[Long](cap >> 1)
@@ -159,7 +163,7 @@ object MinHashLSH {
     } else {
       val capacity = t.length - n + 1
       val s =
-        if (capacity * 2 > MaxRetainedScratchCap) new ShingleScratch
+        if (capacity.toLong * 2 > MaxRetainedScratchCap) new ShingleScratch
         else scratch.get()
       s.reset(capacity)
       var i = 0
@@ -305,20 +309,19 @@ object MinHashLSH {
     // ngramJaccard is undefined) — drop them BEFORE grouping, or md5's
     // null key would collapse them into one bogus J=1.0 clique
     val nonNull = df.filter(col(textCol).isNotNull)
-    // eager localCheckpoint: groups feeds the rep semi-join and both
+    // materialized: groups feeds the rep semi-join and both
     // expansion consumers — a lazy cache() would recompute or pin
-    val groups = nonNull
+    val groups = Materialize(nonNull
       .groupBy(md5(to_binary(col(textCol), lit("utf-8"))).as("_th"))
-      .agg(sort_array(collect_list(col(idCol))).as("ids"))
-      .localCheckpoint(true)
+      .agg(sort_array(collect_list(col(idCol))).as("ids")))
     val reps = groups.select(col("ids").getItem(0).as(idCol))
-    // eager localCheckpoint: the banded view self-joins below and no
+    // materialized: the banded view self-joins below and no
     // exchange sits under it, so without materialization BOTH join
     // sides would recompute the signature UDF pass from the scan.
     // Everything downstream reads nonNull (not df) — the null exclusion
     // is stated once at the source, same as the SimHash path
-    val b = bands(signatures(nonNull.join(reps, Seq(idCol), "left_semi"), p, idCol, textCol), p, idCol)
-      .localCheckpoint(true)
+    val b = Materialize(
+      bands(signatures(nonNull.join(reps, Seq(idCol), "left_semi"), p, idCol, textCol), p, idCol))
     val candPairs = b.as("l").join(b.as("r"),
         col("l.band") === col("r.band") && col("l.band_hash") === col("r.band_hash") &&
           col(s"l.$idCol") < col(s"r.$idCol"))

@@ -3,6 +3,7 @@ package graft.dedup
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.Materialize
 import graft.sim.{KMeansLite, Knn}
 
 /** Semantic (embedding-space) deduplication: KMeans clustering, then
@@ -93,21 +94,6 @@ object SemanticDedup {
     KMeansLite.fit(samples, k, iters = 10, seed = seed)
   }
 
-  /** Assign a kmeans cluster per embedding, with k auto-grown from the
-    * corpus size ([[autoK]]). One count + one full pass (transform);
-    * the model comes from [[fitModel]]'s bounded sample. The input is
-    * materialized once (localCheckpoint) — count, fit sample and
-    * assignment would otherwise each re-evaluate an upstream embedder
-    * UDF (same discipline as [[withBlocks]]).
-    */
-  def withClusters(df: DataFrame, k: Int, seed: Long = 42,
-                   idCol: String = "vec_id", vecCol: String = "embedding",
-                   targetCellSize: Int = TargetCellSize): DataFrame = {
-    val mat = df.localCheckpoint(true)
-    val kEff = autoK(mat.count(), k, targetCellSize)
-    assign(mat, fitModel(mat, kEff, seed, vecCol), vecCol)
-  }
-
   private def assign(df: DataFrame, model: KMeansLite.Model, vecCol: String,
                      probes: Int = 1): DataFrame =
     if (probes <= 1) {
@@ -135,10 +121,9 @@ object SemanticDedup {
                  probes: Int = 1): DataFrame = {
     // materialize the embeddings ONCE: count (autoK), fit sample,
     // assignment and the subSplit size-join otherwise each re-evaluate
-    // an upstream embedder UDF (nondeterministic UDFs block pruning) —
-    // the reference likewise persists its embedder stage output before
-    // kmeans/pairwise consume it
-    val mat = df.localCheckpoint(true)
+    // an upstream embedder UDF — the reference likewise persists its
+    // embedder stage output before kmeans/pairwise consume it
+    val mat = Materialize(df)
     val kEff = autoK(mat.count(), k, targetCellSize)
     val clustered = assign(mat, fitModel(mat, kEff, seed, vecCol), vecCol, probes)
     subSplit(clustered, idCol, maxCellSize)
@@ -215,7 +200,7 @@ object SemanticDedup {
                    targetCellSize: Int = TargetCellSize,
                    maxCellSize: Int = MaxCellSize): DataFrame = {
     require(Set("hard", "easy", "random").contains(whichToKeep))
-    val mat = df.localCheckpoint(true) // one embedder pass (see withBlocks)
+    val mat = Materialize(df) // one embedder pass (see withBlocks)
     val model = fitModel(mat, autoK(mat.count(), k, targetCellSize), seed, vecCol)
     val clustered = subSplit(assign(mat, model, vecCol), idCol, maxCellSize)
     val centroids: Array[Array[Float]] = model.centroids.map(_.map(_.toFloat))

@@ -2,6 +2,7 @@ package graft.dedup
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import graft.Materialize
 import graft.text.PyText
 
 /** SimHash near-duplicate detection (Charikar 2002; Manku et al. 2007,
@@ -91,12 +92,11 @@ object SimHash {
     */
   def nearDupPairs(df: DataFrame, maxHamming: Int = 3,
                    idCol: String = "doc_id", textCol: String = "text"): DataFrame = {
-    // eager localCheckpoint: groups feeds the rep self-join and both
+    // materialized: groups feeds the rep self-join and both
     // expansion consumers — a lazy cache() would recompute the UDF
-    val groups = fingerprints(df, idCol, textCol)
+    val groups = Materialize(fingerprints(df, idCol, textCol)
       .groupBy("simhash")
-      .agg(sort_array(collect_list(col(idCol))).as("ids"))
-      .localCheckpoint(true)
+      .agg(sort_array(collect_list(col(idCol))).as("ids")))
 
     // intra-group: all C(|ids|, 2) pairs at hamming 0, generated
     // per-row (combinations via nested transform — no self-join)
@@ -158,15 +158,14 @@ object SimHash {
     // null texts can never pair (ngramJaccard is undefined for them) —
     // drop before grouping, or md5's null key would collapse them into
     // one bogus J=1.0 clique (same guard as MinHashLSH.verifiedPairs)
-    // eager localCheckpoint: groups feeds reps and both expansion
+    // materialized: groups feeds reps and both expansion
     // consumers — a lazy cache() would recompute the fingerprint UDF
-    val groups = df
+    val groups = Materialize(df
       .filter(col(textCol).isNotNull)
       .select(col(idCol), md5(to_binary(col(textCol), lit("utf-8"))).as("_th"),
         fpU(col(textCol)).as("simhash"))
       .groupBy("simhash", "_th")
-      .agg(sort_array(collect_list(col(idCol))).as("ids"))
-      .localCheckpoint(true)
+      .agg(sort_array(collect_list(col(idCol))).as("ids")))
 
     val repPairs = MinHashLSH.verifyEdges(
       bandedCandidates(groups.select(col("ids").getItem(0).as("id"), col("simhash")), maxHamming),
@@ -197,13 +196,12 @@ object SimHash {
 
   def removalIds(df: DataFrame, maxHamming: Int = 3,
                  idCol: String = "doc_id", textCol: String = "text"): DataFrame = {
-    // eager localCheckpoint: groups feeds two consumers (chain edges and
+    // materialized: groups feeds two consumers (chain edges and
     // representatives) — a lazy cache() here would either recompute the
     // fingerprint UDF twice or pin memory with no unpersist point
-    val groups = fingerprints(df, idCol, textCol)
+    val groups = Materialize(fingerprints(df, idCol, textCol)
       .groupBy("simhash")
-      .agg(sort_array(collect_list(col(idCol))).as("ids"))
-      .localCheckpoint(true)
+      .agg(sort_array(collect_list(col(idCol))).as("ids")))
     val chainEdges = groups.filter(size(col("ids")) > 1)
       .select(explode(expr(
         "transform(slice(ids, 1, size(ids) - 1), (x, i) -> struct(x as src, ids[i + 1] as dst))")).as("e"))

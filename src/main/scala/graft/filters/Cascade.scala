@@ -64,12 +64,4 @@ object Cascade extends Serializable {
       }
     out.drop("_verdict")
   }
-
-  /** Per-filter drop counts — the metrics table the reference keeps as
-    * StagePerfStats (utils/performance_utils.py:31-60). A single narrow
-    * aggregation over first_reject; no extra pass over text.
-    */
-  def metrics(scored: DataFrame): DataFrame =
-    scored.groupBy(coalesce(col("first_reject"), lit("__kept__")).as("filter"))
-      .agg(count(lit(1)).as("docs"))
 }

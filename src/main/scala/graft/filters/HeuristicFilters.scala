@@ -449,14 +449,17 @@ object HeuristicFilters {
     * per-window allocation. counts==0 marks an empty slot; reset only
     * zeroes the capacity a document needs.
     */
-  private final class NGramCounter {
+  private[filters] final class NGramCounter {
     private var keys1 = new Array[Long](1 << 11)
     private var keys2 = new Array[Long](1 << 11)
     private var counts = new Array[Int](1 << 11)
     private var mask = (1 << 11) - 1
     def reset(capacity: Int): Unit = {
+      // the table is the power of two ≥ 2 × capacity; past 2^29 that no
+      // longer fits an Int-sized array
+      require(capacity >= 0 && capacity <= (1 << 29), s"n-gram capacity $capacity out of range")
       var cap = 1 << 11
-      while (cap < capacity * 2) cap <<= 1
+      while (cap < capacity.toLong * 2) cap <<= 1
       if (keys1.length < cap) {
         keys1 = new Array[Long](cap)
         keys2 = new Array[Long](cap)
@@ -492,7 +495,7 @@ object HeuristicFilters {
     ThreadLocal.withInitial(() => new NGramCounter)
 
   private def ngramCounter(windows: Int): NGramCounter = {
-    val c = if (windows * 2 > MaxRetainedNGramCap) new NGramCounter else ngramScratch.get()
+    val c = if (windows.toLong * 2 > MaxRetainedNGramCap) new NGramCounter else ngramScratch.get()
     c.reset(windows)
     c
   }

@@ -2,6 +2,7 @@ package graft.io
 
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.Materialize
 import java.nio.file.{Files, Paths, StandardOpenOption}
 
 /** Table IO with commit/lineage/resume semantics.
@@ -290,7 +291,7 @@ final class CatalogTableIO(catalog: String) extends TableIO with Serializable {
     * incremental-recompute path: replace one day/lang slice, keep the
     * rest). v1 session-catalog tables lack the v2 overwrite, so the
     * fallback rewrites remainder ∪ df through the v1 writer — same
-    * rows, not atomic (lineage broken via localCheckpoint so the
+    * rows, not atomic (lineage broken via [[graft.Materialize]] so the
     * table can be replaced under its own read).
     */
   def overwriteWhere(df: DataFrame, table: String,
@@ -306,9 +307,8 @@ final class CatalogTableIO(catalog: String) extends TableIO with Serializable {
         // the condition evaluates to NULL (plain `!condition` is NULL for
         // those and would silently drop them; Iceberg's overwrite(cond)
         // deletes only rows where cond is TRUE)
-        val merged = existing.filter(!coalesce(condition, lit(false)))
-          .unionByName(df.select(existing.columns.map(col): _*))
-          .localCheckpoint(true)
+        val merged = Materialize(existing.filter(!coalesce(condition, lit(false)))
+          .unionByName(df.select(existing.columns.map(col): _*)))
         merged.write.mode(SaveMode.Overwrite).saveAsTable(fqn(table))
     }
 

@@ -34,10 +34,13 @@ object Stages {
   def scoreFilter(filter: DocFilter, textCol: String = "text",
                   retainScore: Boolean = false, invert: Boolean = false): Stage = { df =>
     val f = filter
+    // nondeterministic so the keep filter is not pushed below the
+    // projection with the UDF inlined into it: that scored each kept
+    // row twice
     val u = udf((t: String) => {
       val s = f.score(t)
       (s, f.keep(s))
-    })
+    }).asNondeterministic()
     val scored = df.withColumn("_sf", u(col(textCol)))
     val kept = scored.filter(if (invert) !col("_sf._2") else col("_sf._2"))
     if (retainScore) kept.withColumn(s"score_${f.name}", col("_sf._1")).drop("_sf")

@@ -123,6 +123,18 @@ class SparkOpsSpec extends AnyFunSuite {
       Set("one", "one two three four"))
   }
 
+  test("scoreFilter(retainScore = true) scores each row once") {
+    val evals = spark.sparkContext.longAccumulator("scoreFilter evals")
+    val f = CountingFilter(graft.filters.HeuristicFilters.WordCount(2, 3), evals)
+    // 91 of 1,000 rows are one word and dropped
+    val docs = spark.range(1000)
+      .select(when(col("id") % 11 === 0, lit("one")).otherwise(lit("two words")).as("text"))
+    val kept = Stages.scoreFilter(f, retainScore = true)(docs).collect()
+    assert(kept.length == 909)
+    assert(kept.forall(_.getAs[Double]("score_word_count") == 2.0))
+    assert(evals.value == 1000L)
+  }
+
   test("curation pipeline end to end on cc_pages: keeps clean prose, drops planted junk, scrubs PII") {
     val curated = CurationPipeline.curate(ccPages.limit(400)).cache()
     val byClass = curated.withColumn("cls", expr("cast(regexp_extract(url, '/page/([0-9]+)$', 1) as long) % 10"))
@@ -151,4 +163,13 @@ class SparkOpsSpec extends AnyFunSuite {
       Seq("doc_id", "keep", "first_reject", "quality_score", "token_count", "scrubbed_text"))
     assert(df.count() == 500)
   }
+}
+
+/** A filter that counts its score evaluations. */
+final case class CountingFilter(inner: graft.filters.DocFilter,
+                                evals: org.apache.spark.util.LongAccumulator)
+    extends graft.filters.DocFilter {
+  val name = inner.name
+  def scoreCtx(ctx: graft.filters.DocCtx): Double = { evals.add(1); inner.scoreCtx(ctx) }
+  def keep(score: Double): Boolean = inner.keep(score)
 }

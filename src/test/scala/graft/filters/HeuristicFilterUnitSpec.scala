@@ -173,4 +173,12 @@ class HeuristicFilterUnitSpec extends AnyFunSuite {
     assert(names.indexOf("repeating_top_2grams") == 18)
     assert(names.indexOf("repeating_dup_10gram") == 26)
   }
+
+  test("n-gram counter: a capacity past 2^29 is rejected before any table is sized") {
+    val c = new HF.NGramCounter
+    for (huge <- Seq((1 << 30) + 1, Int.MaxValue))
+      intercept[IllegalArgumentException](c.reset(huge))
+    c.reset(3) // the default table still serves
+    assert(c.inc(1L, 2L) == 1 && c.inc(1L, 2L) == 2)
+  }
 }
