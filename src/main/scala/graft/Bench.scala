@@ -1,15 +1,19 @@
 package graft
 
 import org.apache.spark.sql.functions._
+import scala.util.control.NonFatal
 
 /** Per-round benchmark: times every SparkEntry query on the driver-chosen
   * SF dir, plus the headline curation-throughput run on a deterministic
   * generated cc_pages corpus (the testdata documents table is too small
   * to measure throughput — 5k rows at sf0.1).
   *
-  * Prints ONE JSON line: {"metric","value","unit","queries","sf"}.
-  * The queries map carries per-query seconds plus derived `*_docs_per_s`
-  * throughput entries for the headline runs.
+  * Prints a full JSON line, then a summary line sized for a 2000-char
+  * stdout tail: {"metric","value","unit","queries","errors","sf"}. The
+  * queries map carries per-query seconds plus derived `*_docs_per_s`
+  * throughput entries for the headline runs. A catalog entry that throws
+  * is left out of `queries`, named in `errors` with its exception class,
+  * printed with its message on stderr, and makes the run exit 1.
   */
 object Bench {
 
@@ -100,15 +104,21 @@ object Bench {
     results("minhash_docs_per_s") = minhashDocs / minhashSec
 
     // ---- phase 2: catalog queries on the SF dir ----
+    // a failed entry is reported by name and fails the run; it never
+    // becomes a number that the total could drop
+    val errors = scala.collection.mutable.LinkedHashMap.empty[String, Throwable]
     SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (name, fn) =>
-      results(name) = try time(fn(spark, sfDir).count()) catch { case _: Throwable => -1.0 }
+      try results(name) = time(fn(spark, sfDir).count())
+      catch { case NonFatal(e) => errors(name) = e }
     }
 
     val total = results.filter(_._1.endsWith("_sec")).values.sum +
-      results.filterNot(k => k._1.endsWith("_sec") || k._1.endsWith("_per_s")).values.filter(_ > 0).sum
+      results.filterNot(k => k._1.endsWith("_sec") || k._1.endsWith("_per_s")).values.sum
+    val errorsJson = errors.map { case (k, e) =>
+      "\"" + k + "\":\"" + e.getClass.getSimpleName + "\"" }.mkString("{", ",", "}")
     def json(entries: Seq[(String, Double)]): String = {
       val qs = entries.map { case (k, v) => "\"" + k + "\":" + f"$v%.3f" }.mkString("{", ",", "}")
-      s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"sf":"$sfDir"}"""
+      s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"errors":$errorsJson,"sf":"$sfDir"}"""
     }
     // full per-query line first (for the log / post-hoc reads), then a
     // SUMMARY line sized for the driver's 2000-char stdout tail window
@@ -128,5 +138,10 @@ object Bench {
     val omitted = results.size - headline.size - slowest.size
     println(json((headline ++ slowest.sortBy(_._1)) :+ ("queries_omitted_fast" -> omitted.toDouble)))
     spark.stop()
+    if (errors.nonEmpty) {
+      errors.foreach { case (k, e) => System.err.println(s"[bench] $k failed: $e") }
+      System.err.println(s"[bench] ${errors.size} failed: ${errors.keys.mkString(", ")}")
+      sys.exit(1)
+    }
   }
 }

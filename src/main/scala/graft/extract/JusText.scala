@@ -31,7 +31,6 @@ object JusText {
   final case class Paragraph(text: String, charsInLinks: Int,
                              isHeading: Boolean, insideSelect: Boolean) {
     def length: Int = text.length
-    def wordsCount: Int = words.length
     lazy val words: Array[String] = text.split("\\s+").filter(_.nonEmpty)
     def stopwordsDensity(stopwords: Set[String]): Double = {
       if (words.isEmpty) return 0.0

@@ -4,6 +4,8 @@ import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Materialize
 import java.nio.file.{Files, Paths, StandardOpenOption}
+import java.util.concurrent.ConcurrentLinkedQueue
+import java.util.concurrent.atomic.{AtomicBoolean, AtomicInteger}
 
 /** Table IO with commit/lineage/resume semantics.
   *
@@ -45,8 +47,9 @@ final class ManifestParquetIO(root: String) extends TableIO with Serializable {
     appendManifest(table, s"""{"event":"commit","table":"$table","rows":${obs.get("rows")}}""")
   }
 
-  /** Append a lineage record (atomic enough for a single driver). */
-  def appendManifest(table: String, jsonLine: String): Unit = {
+  /** Append a lineage record. Synchronized: the unit threads of one
+    * [[runCheckpointed]] call append concurrently. */
+  def appendManifest(table: String, jsonLine: String): Unit = synchronized {
     Files.createDirectories(Paths.get(root))
     Files.writeString(manifestPath(table), jsonLine + "\n",
       StandardOpenOption.CREATE, StandardOpenOption.APPEND)
@@ -74,8 +77,9 @@ final class ManifestParquetIO(root: String) extends TableIO with Serializable {
     read(spark, table)
   }
 
-  /** Work units already committed for `table` (for resume). */
-  def committedUnits(table: String): Set[String] = {
+  /** Work units already committed for `table` (for resume). Synchronized
+    * with [[appendManifest]], so a read never sees a half-appended line. */
+  def committedUnits(table: String): Set[String] = synchronized {
     val p = manifestPath(table)
     if (!Files.exists(p)) return Set.empty
     scala.jdk.CollectionConverters.ListHasAsScala(Files.readAllLines(p)).asScala
@@ -87,10 +91,23 @@ final class ManifestParquetIO(root: String) extends TableIO with Serializable {
 
   /** Checkpointed per-unit run: split the input by a unit column (e.g. a
     * bucketed hash of url, or days(warc_ts)), skip committed units,
-    * process and commit the rest one unit at a time. Exact resume: a
-    * killed run reprocesses only uncommitted units and the final output
-    * equals a single-run output. `partitionCols` adds hive-style output
+    * process and commit the rest unit by unit. Exact resume: a killed run
+    * reprocesses only uncommitted units and the final output equals a
+    * single-run output. `partitionCols` adds hive-style output
     * partitioning inside each unit (e.g. lang) so downstream reads prune.
+    *
+    * Units in flight: up to `min(pending units, defaultParallelism)`
+    * units run at once, one daemon driver thread (`graft-unit-N`) per
+    * unit, each submitting its own scan → process → write job. Spark runs
+    * jobs from several threads side by side, and the FIFO pool orders
+    * their tasks by job id, so units claimed in sorted order finish
+    * roughly in that order, while the cores one unit leaves idle (its
+    * task tail, its commit, the next unit's planning) run the next
+    * unit's tasks. Each unit still commits on its own, so a crash loses
+    * at most the units in flight. After the first unit fails no further
+    * unit is claimed; the units in flight finish (commit or fail), every
+    * lock is released, and the first failure is rethrown with the others
+    * attached as suppressed.
     *
     * Concurrent drivers: single-writer is the manifest impl's contract
     * (the Iceberg CatalogTableIO path commits atomic snapshots and is
@@ -110,22 +127,24 @@ final class ManifestParquetIO(root: String) extends TableIO with Serializable {
     * units between them instead of racing.
     *
     * @return units left uncommitted because another live driver holds
-    *         them (empty on any single-driver run, including reruns
-    *         after a crash)
+    *         them, sorted (empty on any single-driver run, including
+    *         reruns after a crash)
     */
   def runCheckpointed(df: DataFrame, unitCol: String, table: String,
                       partitionCols: Seq[String] = Nil)
                      (process: DataFrame => DataFrame): Seq[String] = {
-    val fs = new org.apache.hadoop.fs.Path(root)
-      .getFileSystem(df.sparkSession.sparkContext.hadoopConfiguration)
+    val sc = df.sparkSession.sparkContext
+    val fs = new org.apache.hadoop.fs.Path(root).getFileSystem(sc.hadoopConfiguration)
     val done = committedUnits(table)
-    val units = df.select(unitCol).distinct().collect().map(_.get(0).toString).sorted
-    val skipped = scala.collection.mutable.ListBuffer.empty[String]
-    for (u <- units if !done.contains(u)) {
+    val pending = df.select(unitCol).distinct().collect().map(_.get(0).toString).sorted
+      .filterNot(done.contains)
+    val skipped = new ConcurrentLinkedQueue[String]()
+
+    def runUnit(u: String): Unit =
       // the startup snapshot `done` goes stale if another driver commits;
       // re-read the manifest right before claiming (one tiny read/unit)
       if (!committedUnits(table).contains(u)) {
-        if (!tryClaimUnit(fs, table, u)) skipped += u
+        if (!tryClaimUnit(fs, table, u)) skipped.add(u)
         // post-claim re-check: another driver may have committed u and
         // released its lock between our manifest read and our claim (the
         // commit manifest line is appended BEFORE the lock is deleted,
@@ -144,8 +163,33 @@ final class ManifestParquetIO(root: String) extends TableIO with Serializable {
           appendManifest(table, s"""{"event":"unit_commit","table":"$table","unit":"$u","rows":${obs.get("rows")}}""")
         } finally fs.delete(unitLockPath(table, u), false)
       }
+
+    // each thread takes the next pending unit in sorted order until none
+    // is left or a unit has failed (or the caller has left, see finally)
+    val next = new AtomicInteger(0)
+    val stop = new AtomicBoolean(false)
+    val failures = new ConcurrentLinkedQueue[Throwable]()
+    val workers = (1 to math.min(pending.length, sc.defaultParallelism)).map { i =>
+      val t = new Thread(() => {
+        var j = next.getAndIncrement()
+        while (j < pending.length && !stop.get) {
+          try runUnit(pending(j))
+          catch { case e: Throwable => failures.add(e); stop.set(true) }
+          j = next.getAndIncrement()
+        }
+      }, s"graft-unit-$i")
+      t.setDaemon(true)
+      t.start()
+      t
     }
-    val leftover = skipped.toList.filterNot(committedUnits(table).contains)
+    try workers.foreach(_.join()) finally stop.set(true)
+    if (!failures.isEmpty) {
+      val first = failures.poll()
+      failures.forEach(e => first.addSuppressed(e))
+      throw first
+    }
+
+    val leftover = skipped.toArray(Array.empty[String]).toList.sorted.filterNot(committedUnits(table).contains)
     if (leftover.nonEmpty)
       System.err.println(s"[resume] ${leftover.size} unit(s) of '$table' held by another live driver " +
         s"and still uncommitted: ${leftover.take(10).mkString(",")}${if (leftover.size > 10) ",…" else ""} — " +

@@ -1,27 +1,16 @@
 package graft.multimodal
 
-import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types._
 
 /** Multimodal column plumbing: image/audio/video payloads as opaque
-  * `binary` columns with typed metadata structs.
+  * `binary` columns with a typed metadata struct.
   *
-  * The decode step itself is STUBBED (no image/audio codecs in this
-  * container — see `decodeStub`); everything Spark-side is real: schema,
-  * partition-size control for wide binary rows, batched per-partition
-  * processing, and deterministic fake feature extraction so downstream
-  * operators (dedup, ANN) are testable end-to-end.
+  * No codec decodes a payload: the container type comes from its magic
+  * bytes and image dimensions from its container headers, so the
+  * metadata is real without an image/audio codec.
   */
 object BinaryOps {
-
-  val mediaMetaSchema: StructType = StructType(Seq(
-    StructField("byte_length", LongType, nullable = false),
-    StructField("sha256", StringType, nullable = false),
-    StructField("magic", StringType, nullable = true),     // sniffed container type
-    StructField("width", IntegerType, nullable = true),    // null until real decode
-    StructField("height", IntegerType, nullable = true)
-  ))
 
   /** Container sniffing from magic bytes — real logic, no codec needed. */
   def sniffMagic(bytes: Array[Byte]): String = {
@@ -94,29 +83,6 @@ object BinaryOps {
     } catch { case _: IndexOutOfBoundsException => None }
   }
 
-  /** DECODE STUB — a real deployment plugs a JNI/codec here. Deterministic
-    * fake: "features" are a normalized histogram of byte values folded to
-    * `dim` buckets, so identical payloads give identical embeddings and
-    * near-identical payloads give close ones (usable to exercise ANN +
-    * near-dup plumbing at full scale).
-    */
-  def decodeStub(bytes: Array[Byte], dim: Int = 64): Array[Float] = {
-    val hist = new Array[Float](dim)
-    if (bytes == null || bytes.isEmpty) return hist
-    var i = 0
-    while (i < bytes.length) {
-      hist((bytes(i) & 0xff) % dim) += 1f
-      i += 1
-    }
-    var norm = 0.0
-    var j = 0
-    while (j < dim) { norm += hist(j) * hist(j); j += 1 }
-    val inv = if (norm == 0) 0f else (1.0 / math.sqrt(norm)).toFloat
-    j = 0
-    while (j < dim) { hist(j) *= inv; j += 1 }
-    hist
-  }
-
   /** Attach metadata struct to a binary column — sha256/length via native
     * Catalyst expressions (codegen'd), magic sniffing via a tiny UDF.
     */
@@ -133,32 +99,5 @@ object BinaryOps {
         col("_dims._1").as("width"),   // header-parsed; null for non-image payloads
         col("_dims._2").as("height")
       )).drop("_dims")
-  }
-
-  /** Feature extraction over binary payloads. Runs via mapPartitions-style
-    * batched UDF so a real decoder could amortize per-batch model setup —
-    * the Spark analogue of the reference's per-worker setup() hooks
-    * (modules/score_filter.py:268-283).
-    */
-  def withFeatures(df: DataFrame, binCol: String = "payload", dim: Int = 64): DataFrame = {
-    val featUdf = udf((b: Array[Byte]) => decodeStub(b, dim))
-    df.withColumn("features", featUdf(col(binCol)))
-  }
-
-  /** Frame/chunk sampling stub: split a binary payload into fixed-size
-    * chunks and keep every `stride`-th — the partitioning/batch shape of
-    * video frame sampling with the codec swapped out.
-    */
-  def sampleChunks(df: DataFrame, binCol: String = "payload",
-                   chunkBytes: Int = 4096, stride: Int = 10): DataFrame = {
-    val sampler = udf((b: Array[Byte]) => {
-      if (b == null) Array.empty[Array[Byte]]
-      else b.grouped(chunkBytes).zipWithIndex
-        .collect { case (chunk, i) if i % stride == 0 => chunk }
-        .toArray
-    })
-    val withChunks = df.withColumn("chunks", sampler(col(binCol)))
-    val others = withChunks.columns.filter(c => c != "chunks" && c != binCol).map(col)
-    withChunks.select(others :+ posexplode(col("chunks")).as(Seq("chunk_id", "chunk")): _*)
   }
 }

@@ -24,12 +24,8 @@ import org.apache.spark.sql.functions._
   */
 object Salting {
 
-  def saltCol(key: Column, saltBuckets: Int): Column =
-    pmod(xxhash64(key, monotonically_increasing_id()), lit(saltBuckets))
-
-  /** Deterministic salt derived from a second column (stable across
-    * retries — preferred over the monotonic-id variant when a unique
-    * row key like url exists).
+  /** Deterministic salt derived from a unique row key like url (stable
+    * across retries).
     */
   def saltColBy(rowKey: Column, saltBuckets: Int): Column =
     pmod(xxhash64(rowKey), lit(saltBuckets))

@@ -126,8 +126,6 @@ object PiiScrub {
     }
     def scrub(text: String): String =
       if (!maybeMatches(text)) text else pattern.matcher(text).replaceAll(tag)
-    def containsProfanity(text: String): Boolean =
-      maybeMatches(text) && pattern.matcher(text).find()
     /** fraction of words that are profane — a toxicity score. */
     def toxicityScore(text: String): Double = {
       val ws = PyText.splitWhitespace(text)

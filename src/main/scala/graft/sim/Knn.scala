@@ -35,11 +35,6 @@ object Knn {
     if (na == 0.0 || nb == 0.0) -1.0 else dot / math.sqrt(na * nb)
   }
 
-  /** UDF variant kept for callers holding plain Seqs; DataFrame paths
-    * below use the codegen'd native expression instead.
-    */
-  val cosineUdf = udf((a: Seq[Float], b: Seq[Float]) => cosine(a, b))
-
   /** Codegen'd cosine over array<float> columns (no per-row boxing). */
   def cosineCol(a: org.apache.spark.sql.Column, b: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
     graft.functions.CosineSimilarity(a, b)

@@ -44,7 +44,6 @@ object NemotronCC {
   }
 
   def systemPrompt: String = prompts("nemotron_cc_system")
-  def distillSystemPrompt: String = prompts("nemotron_cc_distill_system")
 
   /** The five (template, system-prompt, output column) stage configs
     * (nemotron_cc.py:36-53,123-145).

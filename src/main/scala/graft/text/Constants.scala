@@ -48,8 +48,6 @@ object Constants {
       "settings, you agree to this use. AcceptRead More").toLowerCase(java.util.Locale.ROOT)
   )
 
-  val whiteSpaceList: Set[Char] = Set('\t', '\n', '\r', '\b', ' ')
-
   val commonEnglishWords: Set[String] =
     Set("the", "be", "to", "of", "and", "that", "have", "with")
 

@@ -17,4 +17,7 @@ object BlockLoss {
 
   def listenersOf[T <: SparkListenerInterface : ClassTag](sc: SparkContext): Seq[T] =
     sc.listenerBus.findListenersByClass[T]().toSeq
+
+  /** Block until every event posted so far has reached the listeners. */
+  def drainListenerBus(sc: SparkContext): Unit = sc.listenerBus.waitUntilEmpty()
 }

@@ -3,10 +3,11 @@
 
 Usage: python3 tools/compare_oracle.py <sfDir> <verifyOutDir>
 
-For each query parquet under verifyOutDir, runs the matching oracle SQL
-from oracle_sql.json in DuckDB against the sfDir tables, sorts both
-results by all columns (column names sorted), and compares row counts,
-schemas and values.
+For each key of verifyOutDir/oracle_sql.json, runs the oracle SQL in
+DuckDB against the sfDir tables, sorts it and the entry's output parquet
+by all columns (column names sorted), and compares row counts, schemas
+and values. A key with no output directory is a FAIL. Output
+directories with no oracle are listed as ROWS-ONLY. Exits 1 on any FAIL.
 """
 import json
 import math
@@ -42,14 +43,17 @@ fails, passes, rows_only = [], [], []
 import glob, os
 for d in sorted(glob.glob(f"{outdir}/*")):
     name = os.path.basename(d)
+    if os.path.isdir(d) and name not in oracles:
+        rows_only.append((name, len(con.sql(f"SELECT * FROM '{d}/*.parquet'").fetchall())))
+# every oracle key is checked: a key whose entry wrote no output fails
+for name in sorted(oracles):
+    d = f"{outdir}/{name}"
     if not os.path.isdir(d):
+        fails.append((name, "no output directory (the entry failed or was not run)"))
         continue
     got = con.sql(f"SELECT * FROM '{d}/*.parquet'")
     gcols = got.columns
     grows = got.fetchall()
-    if name not in oracles:
-        rows_only.append((name, len(grows)))
-        continue
     try:
         exp = con.sql(oracles[name])
         ecols = exp.columns
