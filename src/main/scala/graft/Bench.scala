@@ -13,7 +13,10 @@ import scala.util.control.NonFatal
   * queries map carries per-query seconds plus derived `*_docs_per_s`
   * throughput entries for the headline runs. A catalog entry that throws
   * is left out of `queries`, named in `errors` with its exception class,
-  * printed with its message on stderr, and makes the run exit 1.
+  * printed with its message on stderr, and makes the run exit 1. Under
+  * `sbt runMain` that exit makes sbt print two `[error] Nonzero exit
+  * code …` lines after the summary, so the summary is the last stdout
+  * line that starts with `{`, not always the last line.
   */
 object Bench {
 

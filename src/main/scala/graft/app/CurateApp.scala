@@ -63,7 +63,11 @@ object CurateApp {
       .coalesce(1)
       .write.mode(SaveMode.Overwrite).parquet(s"$outRoot/metrics")
 
-    val kept = scored.filter(col("keep")).count()
+    // a row is kept exactly when it has no first_reject, so the kept
+    // count is the metrics table's `__kept__` row: one small file, not a
+    // second scan of the curated output
+    val kept = spark.read.parquet(s"$outRoot/metrics").filter(col("filter") === "__kept__")
+      .select("docs").collect().headOption.fold(0L)(_.getLong(0))
     println(s"curated: kept $kept docs -> $outRoot/curated (filter keep=true for the corpus; " +
       s"metrics: $outRoot/metrics; lineage: $outRoot/curated_manifest.jsonl)")
     spark.stop()

@@ -1,7 +1,12 @@
 package graft.io
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.{Partitioner, ShuffleDependency}
+import org.apache.spark.rdd.{PartitionPruningRDD, ShuffledRDD}
+import org.apache.spark.sql.{DataFrame, GraftSqlBridge, SaveMode, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.execution.UnsafeRowSerializer
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{IntegerType, StructField, StructType}
 import graft.Materialize
 import java.nio.file.{Files, Paths, StandardOpenOption}
 import java.util.concurrent.ConcurrentLinkedQueue
@@ -83,11 +88,10 @@ final class ManifestParquetIO(root: String) extends TableIO with Serializable {
     val p = manifestPath(table)
     if (!Files.exists(p)) return Set.empty
     scala.jdk.CollectionConverters.ListHasAsScala(Files.readAllLines(p)).asScala
-      .flatMap { line =>
-        val m = """"unit":"([^"]+)"""".r.findFirstMatchIn(line)
-        m.map(_.group(1))
-      }.toSet
+      .flatMap(line => unitField.findFirstMatchIn(line).map(_.group(1))).toSet
   }
+
+  private val unitField = """"unit":"([^"]+)"""".r
 
   /** Checkpointed per-unit run: split the input by a unit column (e.g. a
     * bucketed hash of url, or days(warc_ts)), skip committed units,
@@ -96,18 +100,33 @@ final class ManifestParquetIO(root: String) extends TableIO with Serializable {
     * single-run output. `partitionCols` adds hive-style output
     * partitioning inside each unit (e.g. lang) so downstream reads prune.
     *
+    * One shuffle feeds every unit: once the pending units are known, the
+    * rows of those units (and only those) are shuffled once, each unit
+    * owning its own `ceil(spark.sql.shuffle.partitions / pending)` reduce
+    * partitions (at least one). A row's partition within its unit comes
+    * from a hash of its bytes, so a retried map task places every row
+    * where the first attempt did. Unit u's frame reads only u's reduce
+    * partitions and has `df`'s schema. So the input is read twice per
+    * call (the unit listing and the shuffle's map stage), not once per
+    * unit, and each unit writes from its own few partitions. The frame
+    * `process` sees is read from the shuffle, so `input_file_name()` is
+    * empty there. The shuffle's files and map outputs are released when
+    * the call returns, whether it succeeds or fails.
+    *
     * Units in flight: up to `min(pending units, defaultParallelism)`
     * units run at once, one daemon driver thread (`graft-unit-N`) per
-    * unit, each submitting its own scan → process → write job. Spark runs
-    * jobs from several threads side by side, and the FIFO pool orders
-    * their tasks by job id, so units claimed in sorted order finish
-    * roughly in that order, while the cores one unit leaves idle (its
-    * task tail, its commit, the next unit's planning) run the next
-    * unit's tasks. Each unit still commits on its own, so a crash loses
-    * at most the units in flight. After the first unit fails no further
-    * unit is claimed; the units in flight finish (commit or fail), every
-    * lock is released, and the first failure is rethrown with the others
-    * attached as suppressed.
+    * unit, each submitting its own process → write job. Spark runs jobs
+    * from several threads side by side: the first unit job computes the
+    * shared map stage and the others wait for it rather than recompute
+    * it. The FIFO pool orders tasks by job id, so units claimed in
+    * sorted order finish roughly in that order, while the cores one unit
+    * leaves idle (its task tail, its commit, the next unit's planning)
+    * run the next unit's tasks. Each unit still commits on its own, so a
+    * crash loses at most the units in flight (and the shuffle; a rerun
+    * re-shuffles only uncommitted units). After the first unit fails no
+    * further unit is claimed; the units in flight finish (commit or
+    * fail), every lock is released, and the first failure is rethrown
+    * with the others attached as suppressed.
     *
     * Concurrent drivers: single-writer is the manifest impl's contract
     * (the Iceberg CatalogTableIO path commits atomic snapshots and is
@@ -138,9 +157,36 @@ final class ManifestParquetIO(root: String) extends TableIO with Serializable {
     val done = committedUnits(table)
     val pending = df.select(unitCol).distinct().collect().map(_.get(0).toString).sorted
       .filterNot(done.contains)
+    if (pending.isEmpty) return Nil
     val skipped = new ConcurrentLinkedQueue[String]()
 
-    def runUnit(u: String): Unit =
+    // the pending rows, each tagged with its unit's index in `pending`
+    val key = "__graft_unit_index"
+    val unitName = col(unitCol).cast("string")
+    val keyed = df.filter(unitName.isin(pending.toIndexedSeq: _*))
+      .withColumn(key, element_at(typedLit(pending.zipWithIndex.toMap), unitName))
+    val schema = StructType(df.schema.fields :+ StructField(key, IntegerType, nullable = false))
+    val keyIdx = df.schema.length
+    val partitions = df.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt
+    val per = math.max(1, (partitions + pending.length - 1) / pending.length)
+    val reducers = pending.length * per
+    // unit i owns reduce partitions [i·per, (i+1)·per); within them a row
+    // goes by the Murmur3 hash of its bytes, so a retried map task sends
+    // every row where the first attempt did
+    val shuffled = new ShuffledRDD[Int, InternalRow, InternalRow](
+      keyed.queryExecution.toRdd.mapPartitions(_.map { r =>
+        (r.getInt(keyIdx) * per + (if (per > 1) Math.floorMod(r.hashCode, per) else 0), r.copy())
+      }),
+      new Partitioner {
+        def numPartitions: Int = reducers
+        def getPartition(p: Any): Int = p.asInstanceOf[Int]
+      }
+    ).setSerializer(new UnsafeRowSerializer(schema.length))
+    def unitFrame(i: Int): DataFrame = GraftSqlBridge.internalCreateDataFrame(df.sparkSession,
+      PartitionPruningRDD.create(shuffled, _ / per == i).map(_._2), schema).drop(key)
+
+    def runUnit(i: Int): Unit = {
+      val u = pending(i)
       // the startup snapshot `done` goes stale if another driver commits;
       // re-read the manifest right before claiming (one tiny read/unit)
       if (!committedUnits(table).contains(u)) {
@@ -152,7 +198,7 @@ final class ManifestParquetIO(root: String) extends TableIO with Serializable {
         // window reprocessed the unit and duplicated its manifest line
         else if (committedUnits(table).contains(u)) fs.delete(unitLockPath(table, u), false)
         else try {
-          val part = process(df.filter(col(unitCol) === u))
+          val part = process(unitFrame(i))
           // row count observed on the write job itself — no output re-read,
           // and a fully-filtered unit reports rows=0 naturally (the old
           // read-back threw on the _SUCCESS-only directory such units leave)
@@ -163,26 +209,31 @@ final class ManifestParquetIO(root: String) extends TableIO with Serializable {
           appendManifest(table, s"""{"event":"unit_commit","table":"$table","unit":"$u","rows":${obs.get("rows")}}""")
         } finally fs.delete(unitLockPath(table, u), false)
       }
+    }
 
     // each thread takes the next pending unit in sorted order until none
     // is left or a unit has failed (or the caller has left, see finally)
     val next = new AtomicInteger(0)
     val stop = new AtomicBoolean(false)
     val failures = new ConcurrentLinkedQueue[Throwable]()
-    val workers = (1 to math.min(pending.length, sc.defaultParallelism)).map { i =>
+    val workers = (1 to math.min(pending.length, sc.defaultParallelism)).map { n =>
       val t = new Thread(() => {
         var j = next.getAndIncrement()
         while (j < pending.length && !stop.get) {
-          try runUnit(pending(j))
+          try runUnit(j)
           catch { case e: Throwable => failures.add(e); stop.set(true) }
           j = next.getAndIncrement()
         }
-      }, s"graft-unit-$i")
+      }, s"graft-unit-$n")
       t.setDaemon(true)
       t.start()
       t
     }
-    try workers.foreach(_.join()) finally stop.set(true)
+    try workers.foreach(_.join())
+    finally {
+      stop.set(true)
+      GraftSqlBridge.releaseShuffle(sc, shuffled.dependencies.head.asInstanceOf[ShuffleDependency[_, _, _]].shuffleId)
+    }
     if (!failures.isEmpty) {
       val first = failures.poll()
       failures.forEach(e => first.addSuppressed(e))

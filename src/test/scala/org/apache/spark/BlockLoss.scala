@@ -1,11 +1,11 @@
 package org.apache.spark
 
 import scala.reflect.ClassTag
-import org.apache.spark.scheduler.SparkListenerInterface
+import org.apache.spark.scheduler.{SparkListenerInterface, StageInfo}
 
 /** Fault injection for the materialization tests: block removal, and
-  * the checkpoint-dir and listener-bus reads and resets that Spark keeps
-  * package-private. */
+  * the checkpoint-dir, listener-bus and shuffle reads and resets that
+  * Spark keeps package-private. */
 object BlockLoss {
 
   /** Drop every block of `rddId` from executor storage, as an executor
@@ -20,4 +20,16 @@ object BlockLoss {
 
   /** Block until every event posted so far has reached the listeners. */
   def drainListenerBus(sc: SparkContext): Unit = sc.listenerBus.waitUntilEmpty()
+
+  /** The shuffle a map stage writes; None for a result stage. */
+  def shuffleIdOf(stage: StageInfo): Option[Int] = stage.shuffleDepId
+
+  /** Whether the map-output tracker still holds `shuffleId`. */
+  def shuffleRegistered(shuffleId: Int): Boolean =
+    SparkEnv.get.mapOutputTracker.asInstanceOf[MapOutputTrackerMaster].containsShuffle(shuffleId)
+
+  /** Shuffle data and index files of `shuffleId` still on local disk. */
+  def shuffleFiles(shuffleId: Int): Seq[String] =
+    SparkEnv.get.blockManager.diskBlockManager.getAllFiles().map(_.getName)
+      .filter(_.startsWith(s"shuffle_${shuffleId}_"))
 }
