@@ -144,7 +144,9 @@ object MinHashLSH {
 
   /** MinHash signature of one document. Each DISTINCT shingle updates
     * the permutations once (repeated shingles can't change a min); the
-    * update uses exact Mersenne reduction instead of `%`.
+    * update uses exact Mersenne reduction instead of `%`, and only for
+    * the pairs that could still lower a permutation's minimum
+    * ([[permMin]]).
     */
   def signature(text: String, p: Params, a: Array[Long], b: Array[Long]): Array[Long] = {
     val t = PyText.lower(text)
@@ -179,19 +181,52 @@ object MinHashLSH {
     val sig = new Array[Long](k)
     var j = 0
     while (j < k) {
-      val aj = a(j)
-      val bj = b(j)
-      var m = Long.MaxValue
-      var i = 0
-      while (i < hn) {
-        val v = mersenneMod(mulmodM(aj, hs(i)) + bj)
-        if (v < m) m = v
-        i += 1
-      }
-      sig(j) = m
+      sig(j) = permMin(hs, hn, a(j), b(j))
       j += 1
     }
     sig
+  }
+
+  /** One permutation's value, `min over i < hn of (a·hs(i) + b) mod P`
+    * with P = 2^61 − 1, exact. The one value path is
+    * `mersenneMod(mulmodM(a, h) + b)`; a cheap test first rules out the
+    * pairs that cannot lower the running minimum `m`, so only ~ln(hn)
+    * pairs per permutation pay for it.
+    *
+    * Preconditions: `0 <= h < 2^32` ([[shingleHash]] is 32-bit FNV-1a),
+    * `1 <= a <= P − 1` and `0 <= b <= P − 1` ([[coefficients]]).
+    *
+    * The skip window. Write X = a·h < 2^93 as Q·2^61 + R, so Q < 2^32
+    * and R = X mod 2^61 is the low 61 bits of the wrapping product
+    * `a * h`. Since 2^61 ≡ 1 (mod P), the value is v = (t + Q) mod P
+    * with t = (R + b) mod P. Keep `lo = (m − b) mod P` and
+    * `span = P − 2^32 − m − 2`, recomputed only when `m` drops, and skip
+    * the pair when `((a * h − lo) & P) < span`. That is sound:
+    * `(a * h − lo) & P` is `(R − lo) mod 2^61`, never smaller than
+    * d = `(R − lo) mod P`; so a skip means d < P − 2^32 − m − 2, hence
+    * t = m + d < P − 2^32 and t + Q < P, so v = t + Q >= m. The 2^32
+    * guard is what keeps a `t` just below P, whose `t + Q` wraps to a
+    * small value, on the exact path. Before the first value `span` is
+    * negative, so the first pair always takes the exact path.
+    */
+  private[dedup] def permMin(hs: Array[Long], hn: Int, a: Long, b: Long): Long = {
+    var m = Long.MaxValue
+    var lo = 0L
+    var span = -1L // no minimum yet: nothing is skipped
+    var i = 0
+    while (i < hn) {
+      val h = hs(i)
+      if (((a * h - lo) & MERSENNE_PRIME) >= span) {
+        val v = mersenneMod(mulmodM(a, h) + b)
+        if (v < m) {
+          m = v
+          lo = if (m >= b) m - b else m - b + MERSENNE_PRIME
+          span = MERSENNE_PRIME - (1L << 32) - m - 2
+        }
+      }
+      i += 1
+    }
+    m
   }
 
   /** df(id, text) -> (id, sig: array<long>). */

@@ -123,6 +123,31 @@ class SparkOpsSpec extends AnyFunSuite {
       Set("one", "one two three four"))
   }
 
+  test("filterByScore keeps rows whose score column passes; invert flips") {
+    val f = graft.filters.HeuristicFilters.WordCount(2, 3)
+    val docs = Seq(("a", 1.0), ("b", 2.0), ("c", 3.0), ("d", 5.0)).toDF("text", "wc")
+    assert(Stages.filterByScore(f, "wc")(docs).select("text").as[String].collect().toSeq ==
+      Seq("b", "c"))
+    assert(Stages.filterByScore(f, "wc", invert = true)(docs).select("text").as[String]
+      .collect().toSeq == Seq("a", "d"))
+  }
+
+  test("addId: the id is prefix_<xxhash64 of the key column>") {
+    import org.apache.spark.sql.catalyst.expressions.XXH64
+    import org.apache.spark.unsafe.types.UTF8String
+    val urls = Seq("https://a.example/1", "https://b.example/2", "")
+    // Spark's xxhash64 of a string: XXH64 over its UTF-8 bytes, seed 42
+    def xxh(s: String): Long = {
+      val u = UTF8String.fromString(s)
+      XXH64.hashUnsafeBytes(u.getBaseObject, u.getBaseOffset, u.numBytes(), 42L)
+    }
+    val withDefault = Stages.addId("url")(urls.toDF("url")).as[(String, String)].collect().toMap
+    assert(withDefault == urls.map(u => u -> s"doc_${xxh(u)}").toMap)
+    val custom = Stages.addId("url", prefix = "cc", idCol = "key")(urls.toDF("url"))
+    assert(custom.columns.toSeq == Seq("url", "key"))
+    assert(custom.as[(String, String)].collect().forall { case (u, k) => k == s"cc_${xxh(u)}" })
+  }
+
   test("scoreFilter(retainScore = true) scores each row once") {
     val evals = spark.sparkContext.longAccumulator("scoreFilter evals")
     val f = CountingFilter(graft.filters.HeuristicFilters.WordCount(2, 3), evals)

@@ -14,13 +14,17 @@ run length is BENCHMARK.json's run_seconds.
 For every run it records the result line of run.py, the host canary from the
 run record, and the share of CPU time the hypervisor stole from this guest
 during the run (the `steal` column of /proc/stat, read before and after).
+A pair is flagged when either of its runs lost more than STEAL_FLAG of the
+CPU time to steal; the per-run lines and the JSON summary mark it.
 
 For every metric in the result lines it prints each side's median and
 quartiles, the median of the paired ratios B/A with their min-max, and how
 many pairs favoured the change (by the metric's direction in
-BENCHMARK.json; an equal pair favours neither). With --trace 1 the
-metrics are BENCHMARK.json's per-layer metrics. The last stdout line is a
-JSON summary. The exit code is 1 when any run failed or was not correct.
+BENCHMARK.json; an equal pair favours neither). Beside the paired ratios
+over all pairs it prints their median and min-max over the unflagged
+pairs only. With --trace 1 the metrics are BENCHMARK.json's per-layer
+metrics. The last stdout line is a JSON summary. The exit code is 1 when
+any run failed or was not correct.
 
 --tiny passes --tiny to run.py (a smoke test of this tool; its numbers are
 not comparable with full runs).
@@ -35,6 +39,10 @@ import sys
 import tempfile
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+# a run that lost more than this share of CPU time to steal measured the
+# host, not the code: one 0.152-steal run gave an A/B's largest ratio
+STEAL_FLAG = 0.05
 
 
 def cpu_times():
@@ -133,19 +141,24 @@ def main():
             for side in order:
                 runs[side] = run_once(trees[side], a.workload, seed, seconds, a.trace, a.tiny)
                 r = runs[side]
+                mark = " HEAVY-STEAL" if r["steal_share"] > STEAL_FLAG else ""
                 print(f"pair {i + 1} seed {seed} {side}: correct={r['correct']} "
-                      f"steal={r['steal_share']:.3f} canary={r['host_canary']} "
+                      f"steal={r['steal_share']:.3f}{mark} canary={r['host_canary']} "
                       f"{json.dumps(r['metrics'])}", flush=True)
-            pairs.append({"seed": seed, "order": order, **runs})
+            flagged = any(runs[s]["steal_share"] > STEAL_FLAG for s in "AB")
+            if flagged:
+                print(f"pair {i + 1} flagged: a run's steal share exceeds {STEAL_FLAG}", flush=True)
+            pairs.append({"seed": seed, "order": order, "flagged": flagged, **runs})
     finally:
         shutil.rmtree(base_tree, ignore_errors=True)
 
     summary = {}
     names = sorted(set().union(*(p[s]["metrics"].keys() for p in pairs for s in "AB")))
+    flagged_pairs = [i + 1 for i, p in enumerate(pairs) if p["flagged"]]
     print(f"\n{a.workload} trace={a.trace}: A = {a.base} ({base_rev[:12]}), B = working tree, "
-          f"{len(pairs)} pairs")
+          f"{len(pairs)} pairs, flagged for steal > {STEAL_FLAG}: {flagged_pairs or 'none'}")
     print(f"  {'metric':<36} {'A median [q1, q3]':>30} {'B median [q1, q3]':>30} "
-          f"{'B/A median (min-max)':>26} favours B")
+          f"{'B/A median (min-max)':>26} {'unflagged B/A':>26} favours B")
     for name in names:
         both = [p for p in pairs if name in p["A"]["metrics"] and name in p["B"]["metrics"]]
         if not both:
@@ -153,6 +166,8 @@ def main():
         av = [p["A"]["metrics"][name] for p in both]
         bv = [p["B"]["metrics"][name] for p in both]
         ratios = [b / x for x, b in zip(av, bv) if x]
+        clean = [p["B"]["metrics"][name] / p["A"]["metrics"][name] for p in both
+                 if not p["flagged"] and p["A"]["metrics"][name]]
         direction = better.get(name, "higher")
         wins = sum(1 for x, b in zip(av, bv) if (b > x if direction == "higher" else b < x))
         row = {"a_median": statistics.median(av), "a_quartiles": quartiles(av),
@@ -160,21 +175,29 @@ def main():
                "ratio_median": statistics.median(ratios) if ratios else None,
                "ratio_min": min(ratios) if ratios else None,
                "ratio_max": max(ratios) if ratios else None,
+               "unflagged_ratio_median": statistics.median(clean) if clean else None,
+               "unflagged_ratio_min": min(clean) if clean else None,
+               "unflagged_ratio_max": max(clean) if clean else None,
+               "unflagged_pairs": len(clean),
                "favours_b": wins, "pairs": len(both), "better": direction}
         summary[name] = row
         aq, bq = row["a_quartiles"], row["b_quartiles"]
         ratio = (f"{row['ratio_median']:.3f} ({row['ratio_min']:.3f}-{row['ratio_max']:.3f})"
                  if ratios else "n/a")
+        clean_ratio = (f"{row['unflagged_ratio_median']:.3f} "
+                       f"({row['unflagged_ratio_min']:.3f}-{row['unflagged_ratio_max']:.3f})"
+                       if clean else "n/a")
         print(f"  {name:<36} {row['a_median']:>12.4g} [{aq[0]:.4g}, {aq[1]:.4g}] "
               f"{row['b_median']:>12.4g} [{bq[0]:.4g}, {bq[1]:.4g}] {ratio:>26} "
-              f"{wins}/{len(both)} ({direction} is better)")
+              f"{clean_ratio:>26} {wins}/{len(both)} ({direction} is better)")
     steals = [p[s]["steal_share"] for p in pairs for s in "AB"]
     print(f"  steal share per run: max {max(steals):.3f}, median {statistics.median(steals):.3f}")
     all_correct = all(p[s]["correct"] for p in pairs for s in "AB")
     print(json.dumps({"workload": a.workload, "trace": int(a.trace), "base": base_rev,
                       "pairs": len(pairs), "correct": all_correct,
                       "seeds": [p["seed"] for p in pairs],
-                      "steal_share_max": max(steals), "metrics": summary}))
+                      "steal_share_max": max(steals), "steal_flag": STEAL_FLAG,
+                      "flagged_pairs": flagged_pairs, "metrics": summary}))
     sys.exit(0 if all_correct else 1)
 
 
