@@ -91,18 +91,15 @@ object Bench {
       graft.dedup.ExactDedup.removalIds(corpus, idCol = "url", textCol = "text").count()
     }
 
-    // config-driven non-English path END TO END from the reference's own
-    // YAML (parse -> 25-filter fused cascade -> parquet write), so the
+    // config-driven non-English path END TO END from the shipped YAML
+    // (parse -> 25-filter fused cascade -> jsonl write), so the
     // ConfigPipeline entry point has a tracked throughput number
-    val nonEnYaml = "/root/reference/nemo_curator/config/text/heuristic_filter_non_english_pipeline.yaml"
-    if (new java.io.File(nonEnYaml).exists()) {
-      val parsed = graft.pipeline.ConfigPipeline.parse(nonEnYaml,
-        Map("input_path" -> corpusPath, "output_path" -> "/tmp/graft_bench_non_en",
-          "output_filetype" -> "parquet"))
-      throughput("config_non_en",
-        { graft.pipeline.ConfigPipeline.run(spark, parsed, Some(warm)); 0L }) {
-        graft.pipeline.ConfigPipeline.run(spark, parsed, Some(corpus)); 0L
-      }
+    val parsed = graft.pipeline.ConfigPipeline.parse(
+      "src/main/resources/config/text/heuristic_filter_non_english_pipeline.yaml",
+      Map("input_path" -> corpusPath, "output_path" -> "/tmp/graft_bench_non_en"))
+    throughput("config_non_en",
+      { graft.pipeline.ConfigPipeline.run(spark, parsed, Some(warm)); 0L }) {
+      graft.pipeline.ConfigPipeline.run(spark, parsed, Some(corpus)); 0L
     }
 
     // minhash is the one genuinely compute-heavy sketch (260 permutations

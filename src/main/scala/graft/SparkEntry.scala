@@ -421,14 +421,14 @@ object SparkEntry {
         .select("doc_id", "keep", "first_reject")
     }),
 
-    // the SAME cascade driven through the reference's OWN YAML config
+    // the SAME cascade driven through the shipped YAML config
     // (ConfigPipeline.parse on heuristic_filter_english_pipeline.yaml →
     // filter list → fused cascade) — driver-checks the config entry
     // point against the reference-generated labels, so a user pointing
     // the YAML runner at a table gets bit-identical keep/first_reject
     "config_cascade_en" -> ((s, dir) => {
       val parsed = graft.pipeline.ConfigPipeline.parse(
-        "/root/reference/nemo_curator/config/text/heuristic_filter_english_pipeline.yaml",
+        "src/main/resources/config/text/heuristic_filter_english_pipeline.yaml",
         Map("input_path" -> "unused", "output_path" -> "unused"))
       val filters = parsed.stages
         .collect { case f: graft.pipeline.ConfigPipeline.Filters => f }.head.filters

@@ -4,12 +4,12 @@ package graft.app
   * `python -m ... --config-path` CLI shape:
   *
   *   spark-submit --class graft.app.PipelineApp graft.jar \
-  *     /path/heuristic_filter_english_pipeline.yaml \
+  *     src/main/resources/config/text/heuristic_filter_english_pipeline.yaml \
   *     input_path=/data/in output_path=/data/out
   *
   * Stage-list configs run through [[graft.pipeline.ConfigPipeline.run]];
-  * `workflow:`-form configs (exact/fuzzy/semantic dedup) are detected
-  * and dispatched to `runWorkflow`. Remaining args are `key=value`
+  * configs whose root has a `workflow` key (exact/fuzzy/semantic dedup)
+  * dispatch to `runWorkflow`. Remaining args are `key=value`
   * overrides for `???` placeholders and top-level config keys.
   */
 object PipelineApp {
@@ -25,10 +25,7 @@ object PipelineApp {
 
     val spark = graft.Session("graft-pipeline")
 
-    val isWorkflow = {
-      val src = java.nio.file.Files.readString(java.nio.file.Paths.get(yamlPath))
-      src.linesIterator.exists(_.trim.startsWith("workflow:"))
-    }
+    val isWorkflow = graft.pipeline.YamlVars.load(yamlPath, overrides).root.contains("workflow")
     val out =
       if (isWorkflow) graft.pipeline.ConfigPipeline.runWorkflow(spark, yamlPath, overrides)
       else graft.pipeline.ConfigPipeline.run(spark,

@@ -2,10 +2,11 @@ package graft.classify
 
 import java.nio.file.{Files, Paths, StandardCopyOption}
 
-/** Model-artifact path resolution shared by the classifier loaders.
+/** Artifact path resolution shared by the classifier loaders and the
+  * YAML config reader.
   *
-  * Committed artifacts live under `src/main/resources/models/` and are
-  * therefore ALSO on the classpath under `models/`. Executor-side UDFs
+  * Committed artifacts live under `src/main/resources/` (`models/`,
+  * `config/`) and are therefore ALSO on the classpath. Executor-side UDFs
   * must not depend on the driver's working directory (a CWD-relative
   * path only works when the main runs from the repo root in local
   * mode), so resolution order is:
@@ -35,7 +36,7 @@ private[graft] object Artifacts {
       val in = Option(Thread.currentThread().getContextClassLoader.getResourceAsStream(r))
         .orElse(Option(getClass.getClassLoader.getResourceAsStream(r)))
         .getOrElse(throw new java.io.FileNotFoundException(
-          s"model artifact not found: no file at '$path' and no classpath resource '$r'"))
+          s"artifact not found: no file at '$path' and no classpath resource '$r'"))
       try {
         val suffix = r.replaceAll(".*/", "_")
         val tmp = Files.createTempFile("graft_artifact_", suffix)

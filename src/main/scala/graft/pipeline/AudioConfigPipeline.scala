@@ -1,20 +1,19 @@
 package graft.pipeline
 
-import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.audio.{AudioMetrics, AudioStages, Fleurs}
 
 /** Runner for the reference's Hydra `processors:` audio configs
-  * (tutorials/audio/fleurs/pipeline.yaml) — the second YAML dialect
-  * next to [[ConfigPipeline]]'s `stages:`/`workflow:` forms: a flat
+  * (the shipped src/main/resources/config/audio/fleurs_pipeline.yaml is
+  * one) — the third YAML dialect next to [[ConfigPipeline]]'s
+  * `stages:`/`workflow:` forms, read by the same [[YamlVars]]: a flat
   * `_target_` processor list with `${var}` interpolation against
   * top-level keys (including nested references like
   * `output_dir: ${raw_data_dir}/result`) and `???` required
   * overrides. The network fetch and the NeMo ASR model are the usual
   * injected seams; every other processor dispatches to the ported
-  * audio stages, so the reference's own config file executes
-  * unchanged.
+  * audio stages.
   */
 object AudioConfigPipeline {
 
@@ -25,33 +24,14 @@ object AudioConfigPipeline {
           overrides: Map[String, String],
           fetch: String => Array[Byte],
           asr: Array[Byte] => String): DataFrame = {
-    val mapper = new com.fasterxml.jackson.databind.ObjectMapper(
-      new com.fasterxml.jackson.dataformat.yaml.YAMLFactory())
-    val root = mapper.readValue(new java.io.File(yamlPath),
-      classOf[java.util.Map[String, Object]]).asScala
-
-    def scalar(v: Object): Option[String] = v match {
-      case null => None
-      case s: String => Some(s)
-      case n: Number => Some(n.toString)
-      case b: java.lang.Boolean => Some(b.toString)
-      case _ => None
-    }
-    // top-level vars with bounded fixpoint interpolation (output_dir
-    // references raw_data_dir); overrides shadow, and must fill every ???
-    val vars = YamlVars.fixpoint(
-      root.toMap.collect { case (k, v) if scalar(v).isDefined => k -> scalar(v).get } ++
-        overrides)
-    def resolve(raw: String): String = YamlVars.resolve(raw, vars)
-
-    val all = root.get("processors") match {
-      case Some(l: java.util.List[_]) =>
-        l.asScala.toVector.map(_.asInstanceOf[java.util.Map[String, Object]].asScala)
-      case _ => throw new IllegalArgumentException(s"$yamlPath has no processors: list")
-    }
+    // output_dir references raw_data_dir; overrides must fill every ???
+    val cfg = YamlVars.load(yamlPath, overrides)
+    import cfg.str
+    val all = cfg.nodes(cfg.root, "processors")
     // processors_to_run: "all" or a "start:stop" slice (partial reruns
     // over an existing manifest); anything else must not run silently
-    val (processors, startIdx) = vars.getOrElse("processors_to_run", "all") match {
+    val toRun = str(cfg.root, "processors_to_run", "all")
+    val (processors, startIdx) = toRun match {
       case "all" => (all, 0)
       case s if s.matches("-?\\d*:-?\\d*") =>
         val parts = s.split(":", -1)
@@ -64,14 +44,14 @@ object AudioConfigPipeline {
     }
     if (processors.isEmpty)
       throw new IllegalArgumentException(
-        s"processors_to_run=${vars.getOrElse("processors_to_run", "all")} selects no processors")
+        s"processors_to_run=$toRun selects no processors")
     // A slice starting past 0 resumes from the PREVIOUS stage's manifest
     // (the reference's processors are file-chained jsonl manifests) —
     // the first selected processor must name it via input_manifest_file;
     // running it against nothing would NPE inside the stage
     val initial: DataFrame =
       if (startIdx == 0) null
-      else processors.head.get("input_manifest_file").flatMap(scalar).map(resolve) match {
+      else cfg.get(processors.head, "input_manifest_file") match {
         case Some(manifest) => graft.io.JsonlIO.readInferred(spark, manifest)
         case None => throw new IllegalArgumentException(
           s"processors_to_run starts at $startIdx: the first selected processor " +
@@ -79,39 +59,34 @@ object AudioConfigPipeline {
       }
 
     processors.foldLeft(initial) { (df, p) =>
-      def str(k: String, default: => String = null): String =
-        p.get(k).flatMap(scalar).map(resolve).getOrElse(default)
-      val target = scalar(p("_target_")).get.split('.').last
-      target match {
+      cfg.target(p) match {
         case "CreateInitialManifestFleursStage" =>
-          Fleurs.initialManifest(spark, str("lang"), str("split"),
+          Fleurs.initialManifest(spark, str(p, "lang"), str(p, "split"),
             (url: String, out: java.io.OutputStream) => out.write(fetch(url)),
-            str("raw_data_dir"))
+            str(p, "raw_data_dir"))
         case "InferenceAsrNemoStage" =>
           AudioStages.withTranscription(df, asr)
         case "GetPairwiseWerStage" =>
-          AudioMetrics.withWer(df, str("text_key", "text"),
-            str("pred_text_key", "pred_text"), str("wer_key", "wer"))
+          AudioMetrics.withWer(df, str(p, "text_key", "text"),
+            str(p, "pred_text_key", "pred_text"), str(p, "wer_key", "wer"))
         case "GetAudioDurationStage" =>
-          AudioStages.withDuration(df, durationCol = str("duration_key", "duration"))
+          AudioStages.withDuration(df, durationCol = str(p, "duration_key", "duration"))
         case "PreserveByValueStage" =>
           // target_value is `int | str` in the reference
           // (audio/common.py:86): keep the YAML node's own type
-          val target = p.getOrElse("target_value",
-            throw new IllegalArgumentException("PreserveByValueStage needs target_value")) match {
-            case n: Number => lit(n.doubleValue())
-            case s: String => lit(resolve(s))
-            case other => throw new IllegalArgumentException(s"bad target_value: $other")
+          val target = p.get("target_value") match {
+            case Some(n: Number) => lit(n.doubleValue())
+            case _ => lit(str(p, "target_value"))
           }
-          AudioStages.preserveByValue(df, str("input_value_key"),
-            target, str("operator", "eq"))
+          AudioStages.preserveByValue(df, str(p, "input_value_key"),
+            target, str(p, "operator", "eq"))
         case "AudioToDocumentStage" =>
           // DocumentBatch keeps the text-side fields; the binary
           // payload stays behind (audio/io/convert.py wraps the same
           // dict rows minus the in-memory audio object)
           AudioStages.audioToDocument(df, df.columns.filterNot(_ == "audio").toSeq)
         case "JsonlWriter" =>
-          graft.io.JsonlIO.write(df, str("path"))
+          graft.io.JsonlIO.write(df, str(p, "path"))
           df
         case other =>
           throw new IllegalArgumentException(s"unsupported processor _target_: $other")

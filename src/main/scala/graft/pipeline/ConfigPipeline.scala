@@ -1,6 +1,5 @@
 package graft.pipeline
 
-import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.filters.{Cascade, CodeFilters, DocFilter, HeuristicFilters => HF}
@@ -8,11 +7,11 @@ import graft.langid.{FastTextBin, FastTextFilters}
 
 /** Config-driven pipeline runner — the reference's PRIMARY entry point
   * (Pipeline.run over a YAML/Hydra stage list, pipeline/pipeline.py:64-197)
-  * consuming the reference's OWN config files: `_target_` class paths
-  * name the stages, `${var}` interpolation resolves against top-level
-  * keys, `???` marks required overrides. A user of the reference can
-  * point this runner at e.g. heuristic_filter_english_pipeline.yaml
-  * unchanged.
+  * over configs in the reference's format: `_target_` class paths name
+  * the stages, `${var}` interpolation resolves against top-level keys,
+  * `???` marks required overrides. Seven text configs written in that
+  * format ship under src/main/resources/config/text/. Every config is
+  * read by [[YamlVars]], which owns the null and interpolation rule.
   *
   * Planning difference (SURVEY §3.1): the reference decomposes stages
   * into Ray actor pools with an object-store hop per stage; here every
@@ -31,60 +30,19 @@ object ConfigPipeline {
 
   final case class Parsed(textField: String, stages: Vector[Stage])
 
-  /** Shared YAML plumbing for both entry forms: load the root map,
-    * build the interpolation vars (hydra nulls become the literal
-    * "null"; overrides shadow), and the ${var}/??? resolver.
-    */
-  private final case class Cfg(root: scala.collection.mutable.Map[String, Object],
-                               vars: Map[String, String]) {
-    def scalar(v: Object): Option[String] = v match {
-      case null => None
-      case s: String => Some(s)
-      case n: Number => Some(n.toString)
-      case b: java.lang.Boolean => Some(b.toString)
-      case _ => None
-    }
-    def resolve(raw: String): String = YamlVars.resolve(raw, vars)
-  }
-
-  private def load(yamlPath: String, overrides: Map[String, String]): Cfg = {
-    val mapper = new com.fasterxml.jackson.databind.ObjectMapper(
-      new com.fasterxml.jackson.dataformat.yaml.YAMLFactory())
-    val root = mapper.readValue(new java.io.File(yamlPath), classOf[java.util.Map[String, Object]])
-      .asScala
-    val cfg = Cfg(root, Map.empty)
-    val vars = root.toMap.map { case (k, v) => k -> cfg.scalar(v).getOrElse("null") } ++ overrides
-    Cfg(root, vars)
-  }
-
   /** Parse a reference pipeline YAML. `overrides` supplies values for
     * `???` placeholders and may shadow any top-level key
     * (e.g. "input_path" -> "/data/in").
     */
   def parse(yamlPath: String, overrides: Map[String, String] = Map.empty): Parsed = {
-    val cfg = load(yamlPath, overrides)
-    import cfg.{resolve, scalar, vars}
-    val root = cfg.root
+    val cfg = YamlVars.load(yamlPath, overrides)
+    import cfg.{bool, dbl, int, str}
 
-    val textField = vars.get("text_field").map(resolve).getOrElse("text")
-    val stageList = root.get("stages") match {
-      case Some(l: java.util.List[_]) => l.asScala.toVector.map(_.asInstanceOf[java.util.Map[String, Object]].asScala)
-      case _ => throw new IllegalArgumentException(s"$yamlPath has no `stages:` list")
-    }
-
-    def str(m: scala.collection.Map[String, Object], k: String): String =
-      resolve(scalar(m.getOrElse(k, throw new IllegalArgumentException(s"missing $k")))
-        .getOrElse(throw new IllegalArgumentException(s"$k is not a scalar")))
-    def dbl(m: scala.collection.Map[String, Object], k: String, dflt: Double): Double =
-      m.get(k).flatMap(scalar).map(resolve).map(_.toDouble).getOrElse(dflt)
-    def int(m: scala.collection.Map[String, Object], k: String, dflt: Int): Int =
-      m.get(k).flatMap(scalar).map(resolve).map(_.toInt).getOrElse(dflt)
-    def bool(m: scala.collection.Map[String, Object], k: String, dflt: Boolean): Boolean =
-      m.get(k).flatMap(scalar).map(resolve).map(_.toBoolean).getOrElse(dflt)
+    val textField = str(cfg.root, "text_field", "text")
 
     /** reference filter class -> DocFilter, parameter names verbatim. */
-    def docFilter(target: String, p: scala.collection.Map[String, Object]): Either[Stage, DocFilter] =
-      target.split('.').last match {
+    def docFilter(p: YamlVars.Node): Either[Stage, DocFilter] =
+      cfg.target(p) match {
         case "NonAlphaNumericFilter" => Right(HF.NonAlphaNumeric(dbl(p, "max_non_alpha_numeric_to_text_ratio", 0.25)))
         case "SymbolsToWordsFilter" => Right(HF.SymbolsToWords(dbl(p, "max_symbol_to_word_ratio", 0.1)))
         case "NumbersFilter" => Right(HF.Numbers(dbl(p, "max_number_to_text_ratio", 0.15)))
@@ -118,24 +76,23 @@ object ConfigPipeline {
         case "FastTextLangId" =>
           Right(FastTextFilters.FastTextLangIdBinFilter(str(p, "model_path"), dbl(p, "min_langid_score", 0.3)))
         case "FastTextQualityFilter" =>
-          Left(QualityFilter(str(p, "model_path"),
-            p.get("label").flatMap(scalar).map(resolve).getOrElse("__label__hq"),
+          Left(QualityFilter(str(p, "model_path"), str(p, "label", "__label__hq"),
             dbl(p, "alpha", 3.0), int(p, "seed", 42).toLong))
         case other => throw new IllegalArgumentException(s"unsupported filter _target_: $other")
       }
 
-    val stages = stageList.flatMap { m =>
-      val target = scalar(m("_target_")).get
-      target.split('.').last match {
-        case "JsonlReader" | "JsonlReaderStage" => Some(Read("jsonl", str(m, "file_paths")))
-        case "ParquetReader" | "ParquetReaderStage" => Some(Read("parquet", str(m, "file_paths")))
-        case "JsonlWriter" => Some(Write("jsonl", str(m, "path")))
-        case "ParquetWriter" => Some(Write("parquet", str(m, "path")))
+    val stages = cfg.nodes(cfg.root, "stages").map { m =>
+      cfg.target(m) match {
+        case "JsonlReader" | "JsonlReaderStage" => Read("jsonl", str(m, "file_paths"))
+        case "ParquetReader" | "ParquetReaderStage" => Read("parquet", str(m, "file_paths"))
+        case "JsonlWriter" => Write("jsonl", str(m, "path"))
+        case "ParquetWriter" => Write("parquet", str(m, "path"))
         case "ScoreFilter" =>
-          val fo = m("filter_obj").asInstanceOf[java.util.Map[String, Object]].asScala
-          docFilter(scalar(fo("_target_")).get, fo) match {
-            case Right(f) => Some(Filters(Vector(f)))
-            case Left(s) => Some(s)
+          val fo = cfg.node(m, "filter_obj")
+            .getOrElse(throw new IllegalArgumentException("ScoreFilter needs a filter_obj"))
+          docFilter(fo) match {
+            case Right(f) => Filters(Vector(f))
+            case Left(s) => s
           }
         case other => throw new IllegalArgumentException(s"unsupported stage _target_: $other")
       }
@@ -159,37 +116,31 @@ object ConfigPipeline {
     */
   def runWorkflow(spark: SparkSession, yamlPath: String,
                   overrides: Map[String, String] = Map.empty): DataFrame = {
-    val cfg = load(yamlPath, overrides)
-    import cfg.{resolve, scalar, vars}
-    val root = cfg.root
-    val wf = root("workflow").asInstanceOf[java.util.List[_]].asScala.head
-      .asInstanceOf[java.util.Map[String, Object]].asScala
+    val cfg = YamlVars.load(yamlPath, overrides)
     // overrides may shadow workflow params directly (e.g. n_clusters)
-    def opt(k: String): Option[String] =
-      overrides.get(k).orElse(wf.get(k).flatMap(scalar).map(resolve))
-    def str(k: String): String = opt(k).getOrElse(throw new IllegalArgumentException(s"missing $k"))
-    def dbl(k: String, d: Double): Double = opt(k).map(_.toDouble).getOrElse(d)
-    def int(k: String, d: Int): Int = opt(k).map(_.toInt).getOrElse(d)
-    def bool(k: String, d: Boolean): Boolean = opt(k).map(_.toBoolean).getOrElse(d)
+    val wf = cfg.nodes(cfg.root, "workflow").head ++ overrides
+    import cfg.{bool, dbl, int, str}
 
-    val textField = opt("text_field").getOrElse("text")
-    val input = resolve(vars.getOrElse("input_filetype", "jsonl")) match {
-      case "parquet" => spark.read.parquet(str("input_path"))
-      case _ => spark.read.json(str("input_path"))
+    val textField = str(wf, "text_field", "text")
+    val input = str(cfg.root, "input_filetype", "jsonl") match {
+      case "parquet" => spark.read.parquet(str(wf, "input_path"))
+      case _ => spark.read.json(str(wf, "input_path"))
     }
-    val idField = opt("id_field").filter(_ != "null")
     // assign_id: monotone int64 row ids — the Spark analogue of the
     // reference's IdGenerator actor (dedup workflows need integral ids).
     // syntheticIds tracks that the user has no way to join bare ids back
     // (the reference persists IdGenerator state for that); ids-only
     // output then switches to FULL duplicate rows so it stays actionable
-    val (withId, idCol, syntheticIds) = idField match {
+    val (withId, idCol, syntheticIds) = cfg.get(wf, "id_field") match {
       case Some(f) if input.columns.contains(f) => (input, f, false)
       case _ => (input.withColumn("id", monotonically_increasing_id()), "id", true)
     }
-    def removalOutput(removalIds: DataFrame): DataFrame =
-      if (syntheticIds) withId.join(removalIds, Seq(idCol), "left_semi").drop(idCol)
-      else removalIds
+    // the reference's contract: the deduplicated corpus when
+    // perform_removal is true, the removal ids otherwise
+    def output(base: DataFrame, removal: DataFrame): DataFrame =
+      if (bool(wf, "perform_removal", d = false)) base.join(removal, Seq(idCol), "left_anti")
+      else if (syntheticIds) base.join(removal, Seq(idCol), "left_semi").drop(idCol)
+      else removal
 
     // BEYOND-THE-REFERENCE `index_path` extension: dedupe THIS batch
     // (one SNAPSHOT) against every OTHER committed snapshot under the
@@ -199,89 +150,58 @@ object ConfigPipeline {
     // of the same batch targets the same subtable: removals are
     // recomputed identically no matter where a previous attempt died
     // (its own subtable is always excluded from the index read), and
-    // the `update_index: true` write is an idempotent overwrite-commit.
-    // The bootstrap snapshot is just the first one — no special casing.
-    // update_index defaults FALSE (mutating shared storage is opt-in).
-    def incremental(ip: String, removalIds: String => DataFrame): DataFrame = {
-      // an unresolved `???` cache_path (the fuzzy yaml's required-override
-      // marker with no override given) counts as "not set"
-      val cachePathSet =
-        scala.util.Try(opt("cache_path")).toOption.flatten.exists(_ != "null")
-      require(!cachePathSet,
-        "index_path and cache_path cannot be combined: the incremental snapshot " +
-          "run recomputes the batch sketch per attempt (it is cheap at batch " +
-          "scale); drop one of the two options")
-      val snapshotId = opt("snapshot_id").getOrElse {
-        val md = java.security.MessageDigest.getInstance("MD5")
-        md.digest(str("input_path").getBytes("UTF-8")).map("%02x".format(_)).mkString.take(16)
-      }
-      val removal = removalIds(snapshotId)
-      if (bool("perform_removal", d = false))
-        withId.join(removal, Seq(idCol), "left_anti")
-      else removalOutput(removal)
-      // (the snapshot index write happens inside removalIds when
-      // update_index is true — idempotent, so ordering vs the output
-      // write does not matter)
-    }
-
-    // single-corpus fuzzy run (the reference's own contract), with the
-    // cache_path stage-resume variant
-    def runFuzzySingle(p: graft.dedup.MinHashLSH.Params): DataFrame =
-      opt("cache_path").filter(_ != "null") match {
-        case Some(cache) =>
-          // reference contract: cache_path persists each stage
-          // (minhashes/edges/components) so a crashed run resumes from
-          // the last completed stage. Synthetic ids are persisted too —
-          // they are not stable across reruns otherwise.
-          val base = if (syntheticIds) graft.dedup.FuzzyCheckpoint.stableInput(withId, cache)
-                     else withId
-          val removal = graft.dedup.FuzzyCheckpoint.removalIds(base, p, cache, idCol, textField)
-          if (bool("perform_removal", d = false))
-            base.join(removal, Seq(idCol), "left_anti")
-          else if (syntheticIds) base.join(removal, Seq(idCol), "left_semi").drop(idCol)
-          else removal
-        case None =>
-          if (bool("perform_removal", d = false))
-            graft.dedup.MinHashLSH.removeDuplicates(withId, p, idCol = idCol, textCol = textField)
-          else removalOutput(graft.dedup.MinHashLSH.removalIds(withId, p, idCol = idCol, textCol = textField))
-      }
-
-    val target = scalar(wf("_target_")).get.split('.').last
-    val result: DataFrame = target match {
-      case "ExactDeduplicationWorkflow" =>
-        opt("index_path").filter(_ != "null") match {
-          case Some(ip) =>
-            incremental(ip, snap =>
-              graft.dedup.IncrementalDedup.exactSnapshotRemovalIds(
-                withId, ip, snap, idCol, textField,
-                updateIndex = bool("update_index", d = false)))
-          case None =>
-            if (bool("perform_removal", d = false))
-              graft.dedup.ExactDedup.removeDuplicates(withId, idCol = idCol, textCol = textField)
-            else removalOutput(graft.dedup.ExactDedup.removalIds(withId, idCol = idCol, textCol = textField))
+    // the `update_index: true` write is an idempotent overwrite-commit
+    // (inside `removalIds`, so its order against the output write does
+    // not matter). The bootstrap snapshot is just the first one — no
+    // special casing. update_index defaults FALSE (mutating shared
+    // storage is opt-in).
+    def incremental(removalIds: (String, String, Boolean) => DataFrame): Option[DataFrame] =
+      cfg.get(wf, "index_path").map { ip =>
+        // the fuzzy yaml's `???` cache_path with no override given is not set
+        require(!cfg.isSet(wf, "cache_path"),
+          "index_path and cache_path cannot be combined: the incremental snapshot " +
+            "run recomputes the batch sketch per attempt (it is cheap at batch " +
+            "scale); drop one of the two options")
+        val snapshotId = cfg.get(wf, "snapshot_id").getOrElse {
+          val md = java.security.MessageDigest.getInstance("MD5")
+          md.digest(str(wf, "input_path").getBytes("UTF-8")).map("%02x".format(_)).mkString.take(16)
         }
+        output(withId, removalIds(ip, snapshotId, bool(wf, "update_index", d = false)))
+      }
+
+    val result: DataFrame = cfg.target(wf) match {
+      case "ExactDeduplicationWorkflow" =>
+        incremental((ip, snap, update) => graft.dedup.IncrementalDedup.exactSnapshotRemovalIds(
+            withId, ip, snap, idCol, textField, updateIndex = update)).getOrElse(
+          output(withId, graft.dedup.ExactDedup.removalIds(withId, idCol = idCol, textCol = textField)))
       case "FuzzyDeduplicationWorkflow" =>
         val p = graft.dedup.MinHashLSH.Params(
-          seed = int("seed", 42).toLong,
-          charNgrams = int("char_ngrams", 24),
-          numBands = int("num_bands", 20),
-          rowsPerBand = int("minhashes_per_band", 13))
-        opt("index_path").filter(_ != "null") match {
-          case Some(ip) =>
-            incremental(ip, snap =>
-              graft.dedup.IncrementalDedup.fuzzySnapshotRemovalIds(
-                withId, ip, snap, p, idCol, textField,
-                updateIndex = bool("update_index", d = false)))
-          case None => runFuzzySingle(p)
-        }
+          seed = int(wf, "seed", 42).toLong,
+          charNgrams = int(wf, "char_ngrams", 24),
+          numBands = int(wf, "num_bands", 20),
+          rowsPerBand = int(wf, "minhashes_per_band", 13))
+        incremental((ip, snap, update) => graft.dedup.IncrementalDedup.fuzzySnapshotRemovalIds(
+            withId, ip, snap, p, idCol, textField, updateIndex = update)).getOrElse(
+          cfg.get(wf, "cache_path") match {
+            case Some(cache) =>
+              // reference contract: cache_path persists each stage
+              // (minhashes/edges/components) so a crashed run resumes from
+              // the last completed stage. Synthetic ids are persisted too —
+              // they are not stable across reruns otherwise.
+              val base = if (syntheticIds) graft.dedup.FuzzyCheckpoint.stableInput(withId, cache)
+                         else withId
+              output(base, graft.dedup.FuzzyCheckpoint.removalIds(base, p, cache, idCol, textField))
+            case None =>
+              output(withId, graft.dedup.MinHashLSH.removalIds(withId, p, idCol = idCol, textCol = textField))
+          })
       case "TextSemanticDeduplicationWorkflow" =>
         // model_identifier: when it names a committed GEMB word-vector
         // artifact (file or classpath), the ARTIFACT embedder runs
         // with the config's embedding_pooling; a GPU
         // sentence-transformer identifier falls back to the
         // deterministic hash embedder standing in the same slot
-        val modelId = opt("model_identifier").getOrElse("")
-        val pooling = opt("embedding_pooling").getOrElse("mean_pooling")
+        val modelId = str(wf, "model_identifier", "")
+        val pooling = str(wf, "embedding_pooling", "mean_pooling")
         val emb =
           if (graft.sim.WordVecEmbedder.isGembArtifact(modelId))
             graft.sim.WordVecEmbedder.withEmbedding(withId, modelId,
@@ -289,16 +209,11 @@ object ConfigPipeline {
           else graft.sim.HashEmbedder.withEmbedding(withId, textField)
         // ranking_strategy ascending=True over cosine_dist_to_cent is
         // which_to_keep="easy"; the default "hard" is descending
-        val ascending = Option(wf.getOrElse("ranking_strategy", null)) match {
-          case Some(rs: java.util.Map[_, _]) =>
-            scalar(rs.asInstanceOf[java.util.Map[String, Object]]
-              .getOrDefault("ascending", "false")).exists(_.toBoolean)
-          case _ => false
-        }
+        val ascending = cfg.node(wf, "ranking_strategy").exists(bool(_, "ascending", d = false))
         val keep = if (ascending) "easy" else "hard"
         // with cache_path, output joins key off the PERSISTED embeddings
         // (synthetic ids are not stable across a crashed run + rerun)
-        val (base, removal) = opt("cache_path").filter(_ != "null") match {
+        val (base, removal) = cfg.get(wf, "cache_path") match {
           case Some(cache) =>
             // reference contract: cache_path persists embeddings and the
             // kmeans tier so a crashed run resumes from the last
@@ -306,22 +221,19 @@ object ConfigPipeline {
             val embCached = graft.dedup.SemanticCheckpoint.embeddedInput(emb, cache)
             (embCached.drop("embedding"),
               graft.dedup.SemanticCheckpoint.removalIdsRanked(
-                embCached, k = int("n_clusters", 100), eps = dbl("eps", 0.01), cache,
+                embCached, k = int(wf, "n_clusters", 100), eps = dbl(wf, "eps", 0.01), cache,
                 whichToKeep = keep, idCol = idCol, vecCol = "embedding"))
           case None =>
             (withId,
               graft.dedup.SemanticDedup.removalIdsRanked(
-                emb, k = int("n_clusters", 100), eps = dbl("eps", 0.01),
+                emb, k = int(wf, "n_clusters", 100), eps = dbl(wf, "eps", 0.01),
                 whichToKeep = keep, idCol = idCol, vecCol = "embedding"))
         }
-        if (bool("perform_removal", d = false))
-          base.join(removal, Seq(idCol), "left_anti")
-        else if (syntheticIds) base.join(removal, Seq(idCol), "left_semi").drop(idCol)
-        else removal
+        output(base, removal)
       case other => throw new IllegalArgumentException(s"unsupported workflow _target_: $other")
     }
-    val outPath = str("output_path")
-    resolve(vars.getOrElse("output_filetype", "jsonl")) match {
+    val outPath = str(wf, "output_path")
+    str(cfg.root, "output_filetype", "jsonl") match {
       case "parquet" => result.write.mode("overwrite").parquet(outPath)
       case _ => result.write.mode("overwrite").json(outPath)
     }

@@ -5,18 +5,19 @@ import org.apache.spark.sql.functions._
 import graft.SparkTestBase
 import graft.audio.WavIO
 
-/** Executes the REFERENCE'S OWN fleurs audio config
-  * (tutorials/audio/fleurs/pipeline.yaml, read-only) end to end over
-  * the in-memory FLEURS fixture — manifest → injected ASR → WER →
-  * duration → WER-gate → document conversion → jsonl output.
+/** Executes the shipped fleurs audio config
+  * (src/main/resources/config/audio/fleurs_pipeline.yaml, written in the
+  * reference's Hydra `processors:` format) end to end over the in-memory
+  * FLEURS fixture — manifest → injected ASR → WER → duration → WER-gate
+  * → document conversion → jsonl output. The config is read by
+  * [[YamlVars]], the reader the stage and workflow dialects share.
   */
 class AudioConfigPipelineSpec extends AnyFunSuite {
   private lazy val spark = SparkTestBase.spark
 
-  private val yaml = "/root/reference/tutorials/audio/fleurs/pipeline.yaml"
+  private val yaml = "src/main/resources/config/audio/fleurs_pipeline.yaml"
 
-  test("the reference fleurs pipeline.yaml runs unchanged over injected seams") {
-    assume(new java.io.File(yaml).exists(), "reference tutorials not present")
+  test("the shipped fleurs pipeline yaml runs over injected seams") {
     // fixture: tar.gz of two wavs + tsv (the AudioSpec fixture)
     val bos = new java.io.ByteArrayOutputStream()
     val tos = new org.apache.commons.compress.archivers.tar.TarArchiveOutputStream(
@@ -126,12 +127,23 @@ class AudioConfigPipelineSpec extends AnyFunSuite {
     }
 
     // circular interpolation raises instead of spinning
-    intercept[IllegalArgumentException] {
-      YamlVars.fixpoint(Map("a" -> "x${b}", "b" -> "y${a}"))
-    }
-    // dotted references fail loudly as unresolved, never pass through
-    intercept[IllegalArgumentException] {
-      YamlVars.resolve("${hydra.run.dir}/out", Map("other" -> "v"))
+    java.nio.file.Files.write(java.nio.file.Paths.get(s"$dir/c6.yaml"),
+      "a: x${b}\nb: y${a}\n".getBytes("UTF-8"))
+    intercept[IllegalArgumentException](YamlVars.load(s"$dir/c6.yaml"))
+    // dotted references fail loudly as unresolved, never pass through,
+    // also when they arrive through a var
+    java.nio.file.Files.write(java.nio.file.Paths.get(s"$dir/c7.yaml"),
+      """other: v
+        |out: ${hydra.run.dir}/out
+        |processors:
+        |  - _target_: x.JsonlWriter
+        |    path: ${hydra.run.dir}/out
+        |  - _target_: x.JsonlWriter
+        |    path: ${out}
+        |""".stripMargin.getBytes("UTF-8"))
+    val c7 = YamlVars.load(s"$dir/c7.yaml")
+    c7.nodes(c7.root, "processors").foreach { p =>
+      intercept[IllegalArgumentException](c7.str(p, "path"))
     }
   }
 }

@@ -4,15 +4,20 @@ import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 import graft.SparkTestBase
 
-/** Drives ConfigPipeline with the REFERENCE'S OWN yaml config files
-  * (read-only from /root/reference) — the switch-without-rewriting
-  * claim, exercised literally.
+/** Drives ConfigPipeline with the seven text configs shipped under
+  * src/main/resources/config/text/, written in the reference's Hydra
+  * format (`_target_`, `ScoreFilter`/`filter_obj`, `workflow:`,
+  * `${var}`, `???`) with every filter parameter spelled out, so a parse
+  * checks the YAML -> filter mapping. All three dialects read through
+  * the one [[YamlVars]] rule: a top-level null is an unset var, a
+  * whole-value `${v}` of an unset var reads as absent, and an embedded
+  * one or a `???` reached through any var chain fails.
   */
 class ConfigPipelineSpec extends AnyFunSuite {
   private lazy val spark = SparkTestBase.spark
   import spark.implicits._
 
-  private val cfgDir = "/root/reference/nemo_curator/config/text"
+  private val cfgDir = "src/main/resources/config/text"
 
   test("english heuristic pipeline yaml parses to the exact 28-filter cascade") {
     val parsed = ConfigPipeline.parse(s"$cfgDir/heuristic_filter_english_pipeline.yaml",
@@ -25,6 +30,9 @@ class ConfigPipelineSpec extends AnyFunSuite {
     fs.zip(expected).foreach { case (a, b) => assert(a == b, s"$a != $b") }
     assert(parsed.stages.head.isInstanceOf[ConfigPipeline.Read])
     assert(parsed.stages.last.isInstanceOf[ConfigPipeline.Write])
+    // the shipped configs also resolve as classpath resources (from the jar)
+    assert(ConfigPipeline.parse("config/text/heuristic_filter_english_pipeline.yaml",
+      Map("input_path" -> "/tmp/unused", "output_path" -> "/tmp/unused_out")) == parsed)
   }
 
   test("non-english pipeline yaml parses to the exact 25-filter cascade") {
@@ -42,6 +50,10 @@ class ConfigPipelineSpec extends AnyFunSuite {
     val fs = parsed.stages.collect { case f: ConfigPipeline.Filters => f }.head.filters
     assert(fs.exists(_.name == "tokenizer_fertility"))
     assert(fs.exists(_.name == "num_lines"))
+    import graft.filters.CodeFilters._
+    assert(fs.init == Vector(PythonCommentToCode(0.001, 0.85), NumberOfLines(10, 20000),
+      XmlHeader(100), Alpha(0.25)))
+    assert(fs.last.asInstanceOf[TokenizerFertility].minCharToTokenRatio == 2.0)
   }
 
   test("missing required override (???) fails loudly") {
@@ -58,6 +70,37 @@ class ConfigPipelineSpec extends AnyFunSuite {
         Map("input_path" -> "/data/???/shard", "output_path" -> "y"))
     }
     assert(ex.getMessage.contains("???"), ex.getMessage)
+
+    // the stage dialect follows the same var rule as the audio one: a
+    // var-of-var chain resolves, a whole-value ${v} of a null v reads as
+    // unset (text_field falls back to "text"), and a ??? reached through
+    // a chain or a null embedded in a longer string fails
+    def yaml(writerPath: String): String = {
+      val p = java.nio.file.Files.createTempFile("cfgvars", ".yaml")
+      java.nio.file.Files.writeString(p,
+        s"""base: /data
+           |in_dir: $${base}/in
+           |input_path: $${in_dir}/shard
+           |tf: null
+           |text_field: $${tf}
+           |req: ???
+           |via: $${req}
+           |stages:
+           |  - _target_: x.JsonlReader
+           |    file_paths: $${input_path}
+           |  - _target_: x.JsonlWriter
+           |    path: $writerPath
+           |""".stripMargin)
+      p.toString
+    }
+    val ok = ConfigPipeline.parse(yaml("/out"))
+    assert(ok.textField == "text")
+    assert(ok.stages == Vector(ConfigPipeline.Read("jsonl", "/data/in/shard"),
+      ConfigPipeline.Write("jsonl", "/out")))
+    val viaChain = intercept[IllegalArgumentException](ConfigPipeline.parse(yaml("${via}")))
+    assert(viaChain.getMessage.contains("???"), viaChain.getMessage)
+    val embedded = intercept[IllegalArgumentException](ConfigPipeline.parse(yaml("${tf}/out")))
+    assert(embedded.getMessage.contains("is null"), embedded.getMessage)
   }
 
   test("end-to-end run over jsonl equals the hand-built cascade") {
@@ -107,6 +150,8 @@ class ConfigPipelineSpec extends AnyFunSuite {
     val baseA = (1 to 40).map(i => s"token$i word$i").mkString(" ")
     val uniqC = (1 to 40).map(i => s"other$i thing$i").mkString(" ")
     val uniqD = (1 to 40).map(i => s"unrelated$i stuff$i").mkString(" ")
+    // no cache_path override: the fuzzy yaml's `???` cache_path stays
+    // unset, which is what an index_path run needs
     def idxBands = graft.dedup.IncrementalDedup
       .committedSnapshotBands(spark, s"$tmp/idx", exclude = "_none_")
     // snapshot 1 (empty index root): bootstrap == plain self-dedup, 0 removals
@@ -222,6 +267,7 @@ class ConfigPipelineSpec extends AnyFunSuite {
       Map("input_path" -> s"$tmp/in", "output_path" -> s"$tmp/out",
         "fasttext_langid_model_path" -> s"$tmp/lid.bin",
         "fasttext_quality_model_path" -> s"$tmp/q.bin"))
+    assert(parsed.stages.contains(ConfigPipeline.QualityFilter(s"$tmp/q.bin", "__label__hq", 3.0, 42L)))
     ConfigPipeline.run(spark, parsed)
     val out = spark.read.json(s"$tmp/out").select("url").as[String].collect().toSet
     assert(out.contains("u1"), s"high-confidence EN doc should survive, got $out")
